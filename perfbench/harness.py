@@ -27,18 +27,6 @@ def quartiles(values: list[float]) -> dict:
     return {"n": len(v), "median": statistics.median(v) if v else q2, "q1": q1, "q3": q3}
 
 
-def tail(values: list[float]) -> dict:
-    """The highest of p50/p75/p90/p95/p99 that has at least ten samples
-    beyond it; ``None`` when there are too few samples for any."""
-    v = sorted(values)
-    best = None
-    for p in (50, 75, 90, 95, 99):
-        if len(v) * (100 - p) / 100 >= 10:
-            k = min(len(v) - 1, int(round(p / 100 * (len(v) - 1))))
-            best = {"percentile": p, "value": v[k], "n": len(v)}
-    return best or {"percentile": None, "value": None, "n": len(v)}
-
-
 class Failures:
     """attempted/failed counters; every mismatch or exception counts."""
 

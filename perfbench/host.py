@@ -68,9 +68,10 @@ def descendants(root: int | None = None) -> list[int]:
     return out
 
 
-def tree_cpu_s() -> float:
+def tree_cpu_s(python_only: bool = False) -> float:
     """CPU seconds used so far by this process's descendants (the driver
-    JVM and the Python workers), including children they have reaped.
+    JVM and the Python workers, or only the workers), including children
+    they have reaped.
     Time the hypervisor steals from this VM is not in it, so on a shared
     host it is steadier than wall time. The delta of two readings stays
     exact when a process exits in between: its time moves to its parent's
@@ -81,6 +82,8 @@ def tree_cpu_s() -> float:
             with open(f"/proc/{pid}/stat", "rb") as f:
                 stat = f.read()
         except OSError:
+            continue
+        if python_only and not stat[stat.find(b"(") + 1 :].startswith(b"python"):
             continue
         fields = stat[stat.rfind(b")") + 2 :].split()
         ticks += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime

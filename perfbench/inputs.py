@@ -1,7 +1,7 @@
-"""Seeded benchmark inputs, generated once per (kind, seed, size) and
-cached under the work directory with a manifest that holds the row count
-and the file digest. A cached input is used only if both still match.
-"""
+"""Benchmark inputs with a manifest that holds each file's row count and
+digest; an input is used only if both still match. Transcripts are
+generated from the seed once per (seed, size) and cached; the query
+suite's tables ship with the benchmark."""
 
 from __future__ import annotations
 
@@ -9,8 +9,8 @@ import hashlib
 import json
 import os
 import shutil
+from concurrent.futures import ProcessPoolExecutor
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -91,15 +91,25 @@ def _get(cache_dir: str, key: str, build) -> tuple[CachedInput, bool]:
 # ---------------------------------------------------------------------------
 # transcripts
 # ---------------------------------------------------------------------------
-def mixed_transcripts(cache_dir: str, seed: int, n_convs: int):
+def _conversations(seed: int, convs: range) -> pa.Table:
+    rows = []
+    for c in convs:
+        rows.extend(fixtures.conversation_rows(c, seed=seed))
+    return pa.Table.from_pylist(rows, schema=TRANSCRIPTS_PA)
+
+
+def mixed_transcripts(cache_dir: str, seed: int, n_convs: int, workers: int):
     """The default archetype mix of ``fixtures.conversation_rows`` (html,
-    pdf-ish, markup, archives, poison, one 800-turn whale conversation)."""
+    pdf-ish, markup, archives, poison, one 800-turn whale conversation).
+    Each conversation is seeded on its own, so ``workers`` processes build
+    the same table as one would."""
 
     def build():
-        rows = []
-        for c in range(n_convs):
-            rows.extend(fixtures.conversation_rows(c, seed=seed))
-        table = pa.Table.from_pylist(rows, schema=TRANSCRIPTS_PA)
+        step = -(-n_convs // workers)
+        chunks = [range(i, min(i + step, n_convs)) for i in range(0, n_convs, step)]
+        with ProcessPoolExecutor(workers) as pool:
+            parts = list(pool.map(_conversations, [seed] * len(chunks), chunks))
+        table = pa.concat_tables(parts)
         text_bytes = pc.sum(pc.binary_length(table.column("text"))).as_py()
         return {"transcripts": table}, {"text_bytes": text_bytes}
 
@@ -109,55 +119,15 @@ def mixed_transcripts(cache_dir: str, seed: int, n_convs: int):
 # ---------------------------------------------------------------------------
 # scale-factor tables for the query suite
 # ---------------------------------------------------------------------------
-DOC_WORDS = (
-    "a agg batch big column customer data dup fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream table "
-    "the value vector window"
-).split()
+SF_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "sf0.01")
 
 
-def sf_tables(cache_dir: str, seed: int, sf: float):
-    """The tables the suite's queries read, in the shape and value ranges
-    of the driver's generated sf directories: documents of a 31-word
-    vocabulary over 20 sources and 5 languages, and unit-norm 64-d
-    embeddings in 10 labelled clusters."""
-
-    def build():
-        rng = np.random.default_rng([seed, 3])
-        n_docs = max(300, int(50_000 * sf))
-        n_emb = max(200, int(50_000 * sf))
-
-        wc = rng.integers(8, 95, n_docs)
-        vocab = np.array(DOC_WORDS)
-        flat = vocab[rng.integers(0, len(vocab), int(wc.sum()))]
-        texts, pos = [], 0
-        for k in wc:
-            texts.append(" ".join(flat[pos : pos + k]))
-            pos += k
-        lang = rng.choice(
-            np.array(["en", "zh", "es", "fr", "de"]), n_docs, p=[0.41, 0.15, 0.15, 0.15, 0.14]
-        )
-        documents = pa.table(
-            {
-                "doc_id": pa.array(np.arange(n_docs), pa.int64()),
-                "text": pa.array(texts, pa.string()),
-                "lang": pa.array(lang, pa.string()),
-                "source": pa.array([f"src{i}" for i in rng.integers(0, 20, n_docs)]),
-                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            }
-        )
-
-        labels = rng.integers(0, 10, n_emb)
-        centers = rng.normal(0, 1, (10, 64))
-        vecs = centers[labels] * 0.35 + rng.normal(0, 1, (n_emb, 64))
-        vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
-        embeddings = pa.table(
-            {
-                "vec_id": pa.array(np.arange(n_emb), pa.int64()),
-                "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
-                "label": pa.array(labels, pa.int32()),
-            }
-        )
-        return {"documents": documents, "embeddings": embeddings}, {"n_docs": n_docs}
-
-    return _get(cache_dir, f"sf-s{seed}-sf{sf}", build)
+def sf_tables() -> CachedInput:
+    """The documents and embeddings tables of the generated sf0.01
+    directory that ``oracle_sql()`` is declared against (TESTDATA.md),
+    copied verbatim into the benchmark with their row counts and digests.
+    They are fixed, not drawn from ``--seed``."""
+    ci = CachedInput(os.path.dirname(SF_DIR), os.path.basename(SF_DIR))
+    if not ci.valid():
+        raise RuntimeError(f"{SF_DIR}: tables missing or not matching manifest.json")
+    return ci

@@ -2,10 +2,11 @@
 
     python3 perfbench/run.py --workload job_mixed --seed 1 --seconds 3 --trace 0
 
-Workloads: job_mixed, query_suite (see perfbench/README.md). Inputs are
-generated from ``--seed`` and cached under ``.perfbench_cache/`` at the
-repository root; all Spark scratch lives there too and is removed at the
-end of the run.
+Workloads: job_mixed, query_suite (see perfbench/README.md). The job's
+inputs are generated from ``--seed`` and cached under
+``.perfbench_cache/`` at the repository root; the suite's tables ship in
+``perfbench/data/``. All Spark scratch lives in ``.perfbench_cache/`` and
+is removed at the end of the run.
 
 With ``--trace 0`` the last stdout line holds the end-to-end metrics;
 with ``--trace 1`` it holds the per-layer metrics, taken from a second,
@@ -34,25 +35,20 @@ T_PROCESS_START = _process_start()
 import argparse  # noqa: E402
 import json  # noqa: E402
 import shutil  # noqa: E402
-import statistics  # noqa: E402
 import sys  # noqa: E402
 import tempfile  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WORKLOADS = ("job_mixed", "query_suite")
-# Passes are counted in CPU seconds of the driver JVM and Python workers:
-# on a shared VM the hypervisor's steal moved their wall time by up to 1.6x
-# an hour apart. The fixed-cost action is counted in wall time: it lasts
-# 0.04-0.25 s, so its CPU reading is mostly the JVM's background threads.
-# The other twin of each figure is in the detail record.
+# Passes are counted in CPU seconds: on a shared VM the hypervisor's steal
+# moved their wall time by up to 1.6x an hour apart. The wall-time twin of
+# each figure, and the fixed cost of one action, are in the detail record.
 END_TO_END = {
     "setup_s": "s",
     "pass_cpu_s": "cpu_s",
     "turns_per_cpu_s": "turns/cpu_s",
-    "fixed_cost_s": "s",
     "worker_rss_mb": "MB",
 }
-SETUP_CYCLES = 5
 
 
 def per_layer_units() -> dict[str, str]:
@@ -69,6 +65,7 @@ def per_layer_units() -> dict[str, str]:
             "catalog.out_bytes": "bytes",
             "catalog.out_bytes_per_in_byte": "ratio",
             "pipeline.exchange_s": "s",
+            "pipeline.resume_noop_s": "s",
             "pipeline.partition_rows_max_over_mean": "ratio",
             "pipeline.partition_bytes_max_over_mean": "ratio",
         }
@@ -105,13 +102,11 @@ def _isolate(work: str) -> None:
 
 
 def run(args, work: str, cache: str) -> tuple[dict, dict]:
-    import threading
-
     import pyarrow
     import pyspark
 
     from perfbench import host, lanes, ledger
-    from perfbench.harness import Failures, Sessions, noop, quartiles
+    from perfbench.harness import Failures, Sessions, noop
     from perfbench.jobs import JobWorkload
     from perfbench.suite import QuerySuite
 
@@ -127,25 +122,16 @@ def run(args, work: str, cache: str) -> tuple[dict, dict]:
         "get_spark_would_use_dev_shm": host.shm_would_be_used(),
     }
     if args.workload == "query_suite":
-        w = QuerySuite(work, cache, args.seed, args.scale)
+        w = QuerySuite(work)
     else:
-        w = JobWorkload(work, cache, args.seed, args.scale)
+        w = JobWorkload(work, cache, args.seed, args.scale, cores)
     fails = Failures()
 
-    # inputs are generated (or validated) while the driver JVM launches;
-    # the wait for them is not set-up time
-    prepared: dict = {}
-
-    def prepare() -> None:
-        t0 = time.perf_counter()
-        try:
-            prepared["generated"] = w.prepare()
-        except BaseException as e:  # re-raised on the main thread
-            prepared["error"] = e
-        prepared["s"] = time.perf_counter() - t0
-
-    gen = threading.Thread(target=prepare)
-    gen.start()
+    # inputs are generated (or validated) before the JVM launches; that
+    # time is not set-up time
+    t0 = time.perf_counter()
+    env["inputs_generated"] = w.prepare()
+    env["inputs_prepared_s"] = prepare_s = time.perf_counter() - t0
 
     sessions = Sessions(work, cores)
     phase_s: dict[str, float] = {}
@@ -157,33 +143,19 @@ def run(args, work: str, cache: str) -> tuple[dict, dict]:
         return now
 
     try:
-        # set-up: session ready, inputs located, one action run. The first
-        # cycle counts from process start and pays the JVM launch.
-        setups = []
-        for i in range(SETUP_CYCLES):
-            t0 = T_PROCESS_START if i == 0 else time.perf_counter()
-            spark = sessions.start()
-            if i == 0:
-                t_wait = time.perf_counter()
-                gen.join()
-                if "error" in prepared:
-                    raise prepared["error"]
-                t0 += time.perf_counter() - t_wait
-                env["inputs_prepared_s"] = prepared["s"]
-                env["inputs_generated"] = prepared["generated"]
-            w.locate(spark)
-            noop(spark.range(1))
-            setups.append(time.perf_counter() - t0)
-        detail["setup_s"] = {**quartiles(setups), "cycles": setups}
+        # set-up, once and cold: from process start until the session is
+        # ready, the inputs are located and the warm pass is done. The
+        # warm pass runs every plan once, so Python worker start-up, JIT
+        # and codegen are paid here and not in the timed passes.
         t = time.perf_counter()
-
-        # untimed: the first execution of every plan pays Python worker
-        # start-up, JIT and codegen
-        if isinstance(w, QuerySuite):
-            w.check_pass(spark, fails)
-        else:
-            w.warm_pass(spark, fails)
+        spark = sessions.start()
+        t = lap("get_spark", t)
+        w.locate(spark)
+        noop(spark.range(1))
+        t = lap("locate", t)
+        w.warm_pass(spark, fails)
         t = lap("warm_pass", t)
+        setup_s = t - T_PROCESS_START - prepare_s
         ticks = host.cpu_ticks()
         with host.RssSampler() as rss:
             walls = w.timed_passes(spark, fails, args.seconds, "pass")
@@ -191,11 +163,10 @@ def run(args, work: str, cache: str) -> tuple[dict, dict]:
         if not walls:
             raise RuntimeError(f"no timed pass succeeded: {fails.messages}")
         t = lap("timed_passes", t)
-        if isinstance(w, JobWorkload):
-            detail["digest_checked_turns"] = w.check_digests(fails)
-        t = lap("digest_check", t)
+        detail["checked"] = w.check(fails)
+        t = lap("check", t)
         e2e, detail["passes"] = w.metrics(walls)
-        e2e["setup_s"] = statistics.median(setups)
+        e2e["setup_s"] = setup_s
         # the JVM's RSS follows G1's heap sizing, which varied by 1.6x over
         # identical runs; the Python workers' RSS follows the engine's code
         peak = rss.peak_by_command
@@ -208,10 +179,7 @@ def run(args, work: str, cache: str) -> tuple[dict, dict]:
         else:
             log_dir = os.path.join(work, "eventlog")
             spark = sessions.start(ledger.event_log_conf(log_dir))
-            if isinstance(w, QuerySuite):
-                w.run_pass(spark, fails, "warm")
-            else:
-                w.warm_pass(spark, fails)
+            w.warm_pass(spark, fails)
             traced = w.timed_passes(spark, fails, args.seconds, "tpass")
             if not traced:
                 raise RuntimeError(f"no traced pass succeeded: {fails.messages}")
@@ -220,7 +188,7 @@ def run(args, work: str, cache: str) -> tuple[dict, dict]:
             sessions.stop()  # flushes the event log
             layer.update(ledger.pass_ledger(ledger.read_event_log(log_dir), w.phases, traced))
             layer.update(lanes.lane_metrics(w.lane_table()))
-            layer["session.get_spark_s"] = statistics.median(sessions.get_spark_s[:SETUP_CYCLES])
+            layer["session.get_spark_s"] = sessions.get_spark_s[0]  # the cold one
             layer["session.jvm_peak_rss_mb"] = peak.get("java", 0.0)
             layer["trace.turns_per_s_delta"] = traced_e2e["turns_per_s"] - e2e["turns_per_s"]
             layer["trace.pass_s_delta"] = traced_e2e["pass_s"] - e2e["pass_s"]
@@ -252,7 +220,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--scale", choices=("full", "tiny"), default="full",
-                   help="input size; tiny is for the smoke run")
+                   help="job input size; tiny is for the smoke run")
     args = p.parse_args(argv)
 
     sys.path.insert(0, ROOT)
