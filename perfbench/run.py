@@ -122,7 +122,7 @@ def run(args, work: str, cache: str) -> tuple[dict, dict]:
         "get_spark_would_use_dev_shm": host.shm_would_be_used(),
     }
     if args.workload == "query_suite":
-        w = QuerySuite(work)
+        w = QuerySuite()
     else:
         w = JobWorkload(work, cache, args.seed, args.scale, cores)
     fails = Failures()

@@ -76,8 +76,7 @@ def _close(a, b) -> bool:
 class QuerySuite:
     name = "query_suite"
 
-    def __init__(self, work: str):
-        self.work = work
+    def __init__(self):
         self.walls: dict[str, list[float]] = {q: [] for q in BENCH_QUERIES}
         self.cpu: dict[str, list[float]] = {q: [] for q in BENCH_QUERIES}
         self.fixed_cost_s: list[float] = []
