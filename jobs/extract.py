@@ -37,11 +37,22 @@ def main(argv: list[str] | None = None) -> int:
         "waves commit; resumable via its own checkpoint key)",
     )
     p.add_argument("--master", default=None)
+    p.add_argument(
+        "--profile",
+        action="store_true",
+        help="run Spark's Python UDF profiler "
+        "(spark.sql.pyspark.udf.profiler=perf) and print spark.profile.show() "
+        "after the run. It profiles only the UDF body: the Python worker's "
+        "set-up before each task (e.g. importlib.invalidate_caches) does not "
+        "show in it",
+    )
     args = p.parse_args(argv)
     if args.n_buckets < 1 or args.n_waves < 1:
         p.error("--n-buckets and --n-waves must be >= 1")
 
     spark = get_spark(app_name=f"extract-{args.run_id}", master=args.master)
+    if args.profile:
+        spark.conf.set("spark.sql.pyspark.udf.profiler", "perf")
     t0 = time.time()
     stats = run_extraction(
         spark,
@@ -56,6 +67,8 @@ def main(argv: list[str] | None = None) -> int:
     )
     stats["elapsed_sec"] = round(time.time() - t0, 2)
     print(json.dumps(stats))
+    if args.profile:
+        spark.profile.show(type="perf")
     return 0
 
 

@@ -229,6 +229,36 @@ def test_gif_decode_roundtrip():
     assert multimodal._lzw_decode(multimodal._lzw_encode(data, 8), 8) == data
 
 
+def _gif_with_codes(min_code: int, codes: list[int]) -> bytes:
+    """A 4x4 GIF whose LZW stream is CLEAR, ``codes``, END at the initial
+    code width, behind the declared ``min_code`` byte."""
+    import struct
+
+    clear, width = 1 << min_code, min_code + 1
+    bw = multimodal._BitWriter()
+    for code in [clear, *codes, clear + 1]:
+        bw.write(code, width)
+    lzw = bw.finish()
+    return (
+        b"GIF89a" + struct.pack("<HHBBB", 4, 4, 0xF7, 0, 0)
+        + multimodal._GIF_GRAY_PALETTE
+        + b"\x2c" + struct.pack("<HHHHB", 0, 0, 4, 4, 0)
+        + bytes([min_code, len(lzw)]) + lzw + b"\x00;"
+    )
+
+
+def test_gif_rejects_min_code_size_over_8():
+    """A min code size above 8 would put the CLEAR/END slots past the 256
+    byte roots; such a stream is malformed and must be rejected, not
+    decoded to pixels."""
+    codes = list(range(16))
+    px = multimodal.decode_gif(_gif_with_codes(8, codes))  # control: legal
+    assert px is not None and px.shape == (4, 4, 3)
+    assert px[:, :, 0].reshape(-1).tolist() == codes
+    assert multimodal.decode_gif(_gif_with_codes(9, codes)) is None
+    assert multimodal.decode_gif(_gif_with_codes(11, codes)) is None
+
+
 def test_jpeg_decode_roundtrip():
     """decode_jpeg must run the real baseline pipeline — Huffman tables read
     from DHT, entropy decode, dequant through the zigzag, IDCT — and land

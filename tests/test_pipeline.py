@@ -22,6 +22,10 @@ def test_run_and_checkpoint(spark, transcripts_path, tmp_path):
     assert stats["completed_buckets"] == 8
 
     df = catalog.read_extracted(spark, out)
+    # the declared read schema is what the job wrote; declaring it means the
+    # per-wave lineage re-read starts no schema-inference job
+    assert df.schema == spark.read.parquet(out).schema
+    assert _jobs_started(spark, lambda: catalog.read_extracted(spark, out)) == 0
     n_in = spark.read.parquet(transcripts_path).count()
     assert df.count() == n_in
 
@@ -164,6 +168,47 @@ def test_dedup_stage_kill_resume_and_skip(spark, transcripts_path, tmp_path):
         .count()
         == 1
     )
+
+
+def _jobs_started(spark, action) -> int:
+    """Number of Spark jobs ``action()`` starts."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fresh_checkpoint_starts_no_job(spark, tmp_path):
+    """A missing checkpoint reads as an empty frame built in the JVM: learning
+    that nothing is done must not run Python tasks (or any job)."""
+    missing = str(tmp_path / "no-such-ckpt")
+    keys = []
+    assert _jobs_started(
+        spark, lambda: keys.extend(catalog.completed_keys(spark, missing, "r").collect())
+    ) == 0
+    assert keys == []
+
+
+def test_checkpoint_frame_matches_python_rows(spark):
+    """checkpoint_frame (Arrow, no Python RDD) yields the same rows and
+    schema as createDataFrame over the equivalent Python tuple."""
+    import datetime as dt
+
+    from tika_addons_spark.schema import CHECKPOINT_SCHEMA
+
+    ts = dt.datetime(2026, 1, 2, 3, 4, 5, 678901, tzinfo=dt.timezone.utc)
+    row = ("r", "stage=near-dup", "completed", 7, 0, 0, 0,
+           {"clusters": 5, "duplicates": 2}, ts, ts)
+    got = catalog.checkpoint_frame(spark, [row])
+    want = spark.createDataFrame([row], CHECKPOINT_SCHEMA)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
 
 
 def test_rollup_and_position(spark, transcripts_df):

@@ -15,3 +15,10 @@ citations.
 """
 
 __version__ = "0.1.0"
+
+# Every Spark Python worker that runs an engine UDF imports this package, so
+# this is where the worker-side fix for PySpark's per-task zip re-reads goes
+# (see zipcache.py; a no-op on Python >= 3.12).
+from . import zipcache as _zipcache  # noqa: E402
+
+_zipcache.install()

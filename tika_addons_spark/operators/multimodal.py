@@ -689,6 +689,10 @@ def _lzw_encode(data: bytes, min_code_size: int) -> bytes:
 
 def _lzw_decode(data: bytes, min_code_size: int) -> bytes:
     """Inverse of :func:`_lzw_encode` (and of any standard GIF encoder)."""
+    if min_code_size > 8:
+        # roots are byte values: a wider root table cannot come from 8-bit
+        # palette indexes (and _LZW_ROOTS has only 256 entries)
+        raise ValueError("bad LZW min code size")
     clear, end = 1 << min_code_size, (1 << min_code_size) + 1
     out = bytearray()
     pos, nbits = 0, len(data) * 8

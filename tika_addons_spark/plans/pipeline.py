@@ -146,7 +146,8 @@ def run_dedup_stage(
     n_turns = written.count()
     n_survivors = written.filter("is_survivor").count()
     finished = dt.datetime.now(dt.timezone.utc)
-    ckpt_rows = spark.createDataFrame(
+    ckpt_rows = catalog.checkpoint_frame(
+        spark,
         [
             (
                 run_id,
@@ -161,7 +162,6 @@ def run_dedup_stage(
                 finished,
             )
         ],
-        catalog.CHECKPOINT_SCHEMA,
     )
     catalog.append_checkpoint(ckpt_rows, ckpt)
     return {

@@ -19,11 +19,19 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.utils import AnalysisException
 
-from ..schema import CHECKPOINT_SCHEMA, TRANSCRIPTS_SCHEMA
+from ..schema import CHECKPOINT_SCHEMA, EXTRACTED_SCHEMA, TRANSCRIPTS_SCHEMA
+
+# The extraction output as written: EXTRACTED_SCHEMA + the partition column.
+EXTRACTED_TABLE_SCHEMA = T.StructType(
+    EXTRACTED_SCHEMA.fields + [T.StructField("bucket", T.IntegerType(), True)]
+)
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -61,8 +69,10 @@ def write_extracted(df: DataFrame, target: str, partition_col: str = "bucket") -
 
 
 def read_extracted(spark: SparkSession, target: str) -> DataFrame:
+    """Read the extraction output. The schema is declared: inferring it
+    from the parquet footers costs one Spark job per read, i.e. per wave."""
     if _is_path(target):
-        return spark.read.parquet(target)
+        return spark.read.schema(EXTRACTED_TABLE_SCHEMA).parquet(target)
     return spark.read.table(target)
 
 
@@ -110,9 +120,22 @@ def read_checkpoint(spark: SparkSession, ckpt: str) -> DataFrame:
             # from scratch and double-write the output, the exact failure
             # this probe exists to prevent.
             if _is_path_not_found(e):
-                return spark.createDataFrame([], CHECKPOINT_SCHEMA)
+                return checkpoint_frame(spark, [])
             raise
     return spark.read.table(ckpt)
+
+
+def checkpoint_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Checkpoint rows the driver already holds (tuples in CHECKPOINT_SCHEMA
+    order), as a DataFrame built in the JVM from one Arrow table.
+    ``createDataFrame`` over a Python list would ship the rows through a
+    Python RDD: one Python task per core, and a second pool of Python
+    workers next to the one the UDFs use."""
+    table = pa.Table.from_pylist(
+        [dict(zip(CHECKPOINT_SCHEMA.names, r)) for r in rows],
+        schema=to_arrow_schema(CHECKPOINT_SCHEMA),
+    )
+    return spark.createDataFrame(table, CHECKPOINT_SCHEMA)
 
 
 def _is_path_not_found(e: AnalysisException) -> bool:
