@@ -1,6 +1,6 @@
 """Hardware-ceiling control for the scaling-efficiency evidence.
 
-Runs the extraction kernel (the SAME `extract_batch` the Spark job uses)
+Runs the extraction kernel (the SAME `extract_batch_arrow` the Spark job uses)
 as a pinned pure-Python process pool over the same bench corpus — no JVM,
 no shuffle, no Arrow transfer — at 8 and 32 workers. Whatever 8→32
 efficiency THIS shows is the host's own thread-scaling ceiling for the
@@ -27,6 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyarrow.parquet as pq
 
+from tika_addons_spark.operators.extract_arrow import extract_batch_arrow
+
 CORPUS = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     ".bench",
@@ -34,30 +36,16 @@ CORPUS = os.path.join(
 )
 BATCH = 4096
 
-# kernel under test: "arrow" (the production mapInArrow kernel, default)
-# or "pandas" (the mapInPandas twin — r2's control used this)
-KERNEL = os.environ.get("HW_CEILING_KERNEL", "arrow")
-
 t = pq.read_table(
     CORPUS, columns=["conv_id", "turn_idx", "role", "ts", "text"]
 )
 n = t.num_rows
-if KERNEL == "arrow":
-    batches = t.combine_chunks().to_batches(max_chunksize=BATCH)
-else:
-    pdf = t.to_pandas()
-    batches = [pdf.iloc[i : i + BATCH] for i in range(0, n, BATCH)]
-print(f"kernel: {KERNEL} batches: {len(batches)} turns: {n}", flush=True)
+batches = t.combine_chunks().to_batches(max_chunksize=BATCH)
+print(f"batches: {len(batches)} turns: {n}", flush=True)
 
 
 def work(idx):
-    if KERNEL == "arrow":
-        from tika_addons_spark.operators.extract_arrow import extract_batch_arrow
-
-        return extract_batch_arrow(batches[idx]).num_rows
-    from tika_addons_spark.operators.extract import extract_batch
-
-    return len(extract_batch(batches[idx]))
+    return extract_batch_arrow(batches[idx]).num_rows
 
 
 from multiprocessing import get_context  # noqa: E402

@@ -295,6 +295,40 @@ def test_png_adam7_decode_exact():
     assert multimodal.decode_png(good[: len(good) // 2]) is None
 
 
+def _png(width: int, height: int, color: int, interlace: int, idat: bytes) -> bytes:
+    import struct
+
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, color, 0, 0, interlace)
+    return (
+        b"\x89PNG\r\n\x1a\n" + multimodal._png_chunk(b"IHDR", ihdr)
+        + multimodal._png_chunk(b"IDAT", idat) + multimodal._png_chunk(b"IEND", b"")
+    )
+
+
+def test_png_decompression_bomb_is_bounded():
+    """decode_png bounds its work by the size IHDR implies, never by what
+    the IDAT inflates to or what the header claims: a 1x1 image carrying
+    200 MB of zeros and a 60000x60000 Adam7 canvas behind a few bytes must
+    both return None with a small traced peak."""
+    import tracemalloc
+    import zlib
+
+    z = zlib.compressobj(9)
+    zeros = bytes(1 << 20)
+    idat = b"".join(z.compress(zeros) for _ in range(200)) + z.flush()
+    inflate_bomb = _png(1, 1, 2, 0, idat)
+    canvas_bomb = _png(60000, 60000, 0, 1, zlib.compress(b""))
+    assert len(inflate_bomb) < 256 * 1024 and len(canvas_bomb) < 128
+    for png in (inflate_bomb, canvas_bomb):
+        tracemalloc.start()
+        try:
+            assert multimodal.decode_png(png) is None
+            _cur, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert peak <= 16 * 1024 * 1024, (len(png), peak)
+
+
 def test_gif_interlaced_decode_exact():
     """GIF89a 4-pass interlacing: rows stored in pass order must scatter
     back to exactly the source pixels."""

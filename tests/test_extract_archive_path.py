@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import base64
 
-import pandas as pd
-
 from tika_addons_spark.functions import sniff
 from tika_addons_spark.operators import binarchive as ba
 from tika_addons_spark.operators.extract import extract_embedded_turns, extract_turns
@@ -77,28 +75,12 @@ def test_oracle_7z_turn_members_joined():
     assert "archive-corrupt" in out2["warnings"]
 
 
-def test_engine_7z_turn_arrow_pandas_parity(spark):
-    """The 7z routing must be identical in the pandas and arrow twins."""
-    from tika_addons_spark.operators.extract import extract_batch
-    from tika_addons_spark.operators.extract_arrow import extract_batch_arrow
-    import pyarrow as pa
-
+def test_engine_7z_turn_arrow_oracle_parity(assert_arrow_equals_oracle):
+    """The arrow router must send a 7z turn to the oracle kernel, next to
+    plain and null siblings in the same batch."""
     uri = _7z_uri([("x", b"content one"), ("y", b"<html><body><p>two para words</p>")])
-    texts = [uri, "plain sibling", None]
-    pdf = pd.DataFrame(
-        {"conv_id": ["c"] * 3, "turn_idx": [0, 1, 2], "text": texts}
-    )
-    exp = extract_batch(pdf)
-    rb = pa.RecordBatch.from_arrays(
-        [pa.array(pdf["conv_id"]), pa.array(pdf["turn_idx"], pa.int32()),
-         pa.array(texts, pa.string())],
-        names=["conv_id", "turn_idx", "text"],
-    )
-    got = extract_batch_arrow(rb).to_pandas()
-    assert got["extracted_text"].tolist() == exp["extracted_text"].tolist()
-    assert got["detected_content_type"].tolist() == exp["detected_content_type"].tolist()
-    assert got["detected_content_type"][0] == sniff.MIME_7Z
-    assert got["parse_status"].tolist() == exp["parse_status"].tolist()
+    got = assert_arrow_equals_oracle([uri, "plain sibling", None])
+    assert got[0]["detected_content_type"] == sniff.MIME_7Z
 
 
 def test_embedded_turns_include_7z(spark):
@@ -190,19 +172,14 @@ def test_fixture_corpus_contains_archive_turns(spark, transcripts_df):
     assert ok.filter(F.length("extracted_text") > 0).count() == ok.count()
 
 
-def test_z_compress_data_uri_turn():
+def test_z_compress_data_uri_turn(assert_arrow_equals_oracle):
     """A base64 .Z data-URI turn must sniff as application/x-compress and
     unpack through the from-scratch LZW codec inside the extraction
-    kernel — on BOTH the pandas and arrow paths, byte-identically."""
+    kernel — and the arrow engine must equal the oracle on it."""
     import base64
-
-    import pandas as pd
-    import pyarrow as pa
 
     from tika_addons_spark.operators import binarchive as ba
     from tika_addons_spark.operators import lzc
-    from tika_addons_spark.operators.extract import extract_batch
-    from tika_addons_spark.operators.extract_arrow import extract_batch_arrow
     from tika_addons_spark.oracle import extract_one
 
     inner = ba.make_zip([("m.txt", b"member text here"),
@@ -215,37 +192,17 @@ def test_z_compress_data_uri_turn():
     assert r["extracted_text"] == 'member text here\n<?xml version="1.0"?>ok'
     assert r["meta"]["n_members"] == "2"
 
-    texts = [uri, "plain text"]
-    pdf = pd.DataFrame({
-        "conv_id": ["a", "b"],
-        "turn_idx": pd.array([0, 1], dtype="int32"),
-        "text": pd.array(texts, dtype=object),
-    })
-    rb = pa.RecordBatch.from_arrays(
-        [pa.array(pdf["conv_id"]), pa.array(pdf["turn_idx"], pa.int32()),
-         pa.array(texts, pa.string())],
-        names=["conv_id", "turn_idx", "text"],
-    )
-    got = extract_batch_arrow(rb).to_pandas()
-    exp = extract_batch(pdf).reset_index(drop=True)
-    for col in ("extracted_text", "detected_content_type", "parse_status",
-                "chars_out"):
-        assert got[col].tolist() == exp[col].tolist(), col
+    assert_arrow_equals_oracle([uri, "plain text"])
 
 
-def test_lz4_data_uri_turn():
+def test_lz4_data_uri_turn(assert_arrow_equals_oracle):
     """A base64 lz4 data-URI turn must sniff as application/x-lz4 and
     unpack through the from-scratch LZ4 frame codec inside the extraction
-    kernel — on BOTH the pandas and arrow paths, byte-identically."""
+    kernel — and the arrow engine must equal the oracle on it."""
     import base64
-
-    import pandas as pd
-    import pyarrow as pa
 
     from tika_addons_spark.operators import binarchive as ba
     from tika_addons_spark.operators import lz4f
-    from tika_addons_spark.operators.extract import extract_batch
-    from tika_addons_spark.operators.extract_arrow import extract_batch_arrow
     from tika_addons_spark.oracle import extract_one
 
     inner = ba.make_zip([("m.txt", b"member text here"),
@@ -258,37 +215,17 @@ def test_lz4_data_uri_turn():
     assert r["extracted_text"] == 'member text here\n<?xml version="1.0"?>ok'
     assert r["meta"]["n_members"] == "2"
 
-    texts = [uri, "plain text"]
-    pdf = pd.DataFrame({
-        "conv_id": ["a", "b"],
-        "turn_idx": pd.array([0, 1], dtype="int32"),
-        "text": pd.array(texts, dtype=object),
-    })
-    rb = pa.RecordBatch.from_arrays(
-        [pa.array(pdf["conv_id"]), pa.array(pdf["turn_idx"], pa.int32()),
-         pa.array(texts, pa.string())],
-        names=["conv_id", "turn_idx", "text"],
-    )
-    got = extract_batch_arrow(rb).to_pandas()
-    exp = extract_batch(pdf).reset_index(drop=True)
-    for col in ("extracted_text", "detected_content_type", "parse_status",
-                "chars_out"):
-        assert got[col].tolist() == exp[col].tolist(), col
+    assert_arrow_equals_oracle([uri, "plain text"])
 
 
-def test_snappy_data_uri_turn():
+def test_snappy_data_uri_turn(assert_arrow_equals_oracle):
     """A base64 framed-snappy data-URI turn must sniff as
     application/x-snappy-framed and unpack through the from-scratch
-    snappy codec inside the extraction kernel — pandas==arrow parity."""
+    snappy codec inside the extraction kernel — arrow==oracle parity."""
     import base64
-
-    import pandas as pd
-    import pyarrow as pa
 
     from tika_addons_spark.operators import binarchive as ba
     from tika_addons_spark.operators import snappyf
-    from tika_addons_spark.operators.extract import extract_batch
-    from tika_addons_spark.operators.extract_arrow import extract_batch_arrow
     from tika_addons_spark.oracle import extract_one
 
     inner = ba.make_zip([("m.txt", b"member text here"),
@@ -300,19 +237,4 @@ def test_snappy_data_uri_turn():
     assert r["parse_status"] == "valid"
     assert r["extracted_text"] == 'member text here\n<?xml version="1.0"?>ok'
 
-    texts = [uri, "plain text"]
-    pdf = pd.DataFrame({
-        "conv_id": ["a", "b"],
-        "turn_idx": pd.array([0, 1], dtype="int32"),
-        "text": pd.array(texts, dtype=object),
-    })
-    rb = pa.RecordBatch.from_arrays(
-        [pa.array(pdf["conv_id"]), pa.array(pdf["turn_idx"], pa.int32()),
-         pa.array(texts, pa.string())],
-        names=["conv_id", "turn_idx", "text"],
-    )
-    got = extract_batch_arrow(rb).to_pandas()
-    exp = extract_batch(pdf).reset_index(drop=True)
-    for col in ("extracted_text", "detected_content_type", "parse_status",
-                "chars_out"):
-        assert got[col].tolist() == exp[col].tolist(), col
+    assert_arrow_equals_oracle([uri, "plain text"])

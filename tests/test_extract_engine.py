@@ -119,32 +119,6 @@ def test_engine_equals_oracle_nested_cols(spark, transcripts_df, transcripts_pdf
     assert n_checked == len(transcripts_pdf)
 
 
-def test_arrow_path_equals_pandas_path(spark, transcripts_df):
-    """The mapInArrow hot path (default) must be byte-identical to the
-    mapInPandas twin over the full fixture corpus, all columns."""
-    import hashlib
-
-    from tika_addons_spark.operators.extract import extract_turns_pandas
-
-    def digest(df):
-        pdf = (
-            df.orderBy("conv_id", "turn_idx")
-            .selectExpr(
-                "conv_id", "turn_idx", "extracted_text", "title",
-                "to_json(map_entries(meta)) AS meta_j", "to_json(spans) AS spans_j",
-                "detected_content_type", "parse_status",
-                "to_json(warnings) AS warnings_j", "chars_in", "chars_out",
-                "n_pages",
-            )
-            .toPandas()
-        )
-        return hashlib.sha256(pdf.to_csv(index=False).encode()).hexdigest()
-
-    assert digest(extract_turns(transcripts_df)) == digest(
-        extract_turns_pandas(transcripts_df)
-    )
-
-
 def test_invariance_shuffle_partitions_and_salt(spark, transcripts_df):
     base = extract_turns(transcripts_df).orderBy("conv_id", "turn_idx")
     base_pdf = base.select(*GATE_COLS).toPandas()

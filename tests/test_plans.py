@@ -67,9 +67,9 @@ def test_extraction_single_python_stage(spark, transcripts_df):
     from tika_addons_spark.operators.extract import extract_turns
 
     p = plan_of(extract_turns(transcripts_df))
-    # exactly one Arrow-batched python operator (mapInArrow since r3; the
-    # pandas twin would show MapInPandas), no per-row PythonUDF eval
-    assert p.count("MapInArrow") + p.count("MapInPandas") == 1, p
+    # exactly one Arrow-batched python operator (mapInArrow, the only
+    # engine path), no pandas conversion, no per-row PythonUDF eval
+    assert p.count("MapInArrow") == 1 and "MapInPandas" not in p, p
     assert "BatchEvalPython" not in p, p
 
 

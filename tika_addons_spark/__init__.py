@@ -4,8 +4,10 @@ A from-scratch reimplementation of the *capabilities* of tballison/tika-addons
 (reference, read-only, at /root/reference) re-expressed Spark-first:
 
 - DataFrame/SQL declarative plans (Catalyst optimizes; no hand scheduling)
-- vectorized Arrow/pandas UDFs for the extraction hot path (HTML boilerplate
-  strip, PDF-ish payload parse, markup normalization) — never per-row Python UDFs
+- one extraction contract: ``oracle.extract_one`` is the per-turn spec and
+  a vectorized mapInArrow UDF (operators/extract_arrow.py) the only engine
+  path (HTML boilerplate strip, PDF-ish payload parse, markup normalization)
+  — never per-row Python UDFs
 - explicit partitioning / salting for skewed conversations
 - checkpoint-table resumability (Iceberg MERGE when available, parquet
   anti-join seam in the sandbox)

@@ -14,15 +14,14 @@ cases are pinned in tests/test_cleaners.py:
 Runs of escaped backslashes (``\\\\``) shield the following code from every
 pass (the alternation-with-skip idiom in the reference).
 
-Implemented fresh in Python ``re`` with a replacement-function idiom; a
-vectorized Series variant drives the pandas-UDF hot path.
+Implemented fresh in Python ``re`` with a replacement-function idiom; the
+extraction engine reaches it through ``oracle.extract_one`` for every
+markup-code turn.
 """
 
 from __future__ import annotations
 
 import re
-
-import pandas as pd
 
 # Pass 1: escaped-backslash runs OR toggle codes.
 _P1 = re.compile(r"((?:\\\\)+|\\[LlOoKk])")
@@ -35,9 +34,6 @@ _P4 = re.compile(r"((?:\\\\)+)|\\S([^/^#]{1,20})[/^#]([^;]{1,20});")
 # Pass 5: escaped braces (kept) OR bare braces (dropped).
 _P5 = re.compile(r"((?:\\)+[{}])|([{}])")
 
-# Codes that can appear — used by the sniffer to detect this archetype.
-MTEXT_MARKER = re.compile(r"\\[AHfSP](?:[^;\\]{0,100};)?")
-
 
 def clean_mtext(text: str) -> str:
     """Apply the full 5-pass cascade + final backslash strip."""
@@ -49,10 +45,3 @@ def clean_mtext(text: str) -> str:
     )
     t = _P5.sub(lambda m: m.group(1) or "", t)
     return t.replace("\\", "")
-
-
-def clean_mtext_series(s: pd.Series) -> pd.Series:
-    """Vectorized-ish variant: pandas str.replace can't take a replacement
-    function, so we map; the regexes are the dominant cost either way and the
-    batch amortizes Arrow transfer."""
-    return s.map(clean_mtext, na_action="ignore")

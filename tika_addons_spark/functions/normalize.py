@@ -1,12 +1,10 @@
 """Text normalization cascades (SURVEY.md §2.8 F1–F8).
 
-Each normalizer exists twice, with identical semantics:
-
-- a pure-Python function (the canonical spec; used by the standalone oracle
-  and by the pandas-UDF hot path — vectorized via ``pd.Series.str`` where
-  possible), and
-- a Spark Column expression (JVM-side, whole-stage-codegen'd) for use in
-  declarative plans where the value is needed without entering Python.
+Each normalizer is a pure-Python function: the canonical spec, used by the
+standalone oracle and therefore by every kernel row of the extraction engine.
+Where a declarative plan needs a value without entering Python (F17's
+stack-trace facet), the module offers a Spark Column expression (JVM-side,
+whole-stage-codegen'd).
 
 Reference semantics:
 - F1 newline collapse + trim: ``content.replaceAll("\\n+","\\n").trim()``
@@ -25,7 +23,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -39,9 +36,6 @@ RE_EMAIL = re.compile(r"[-_.0-9A-Za-z]{1,100}@[-_0-9A-Za-z]{1,100}[-_.0-9A-Za-z]
 # Python's \w includes digits/underscore; [^\W\d_] == unicode alphabetic.
 RE_NON_ALPHA_RUN = re.compile(r"(?:[^\w]|[\d_])+", re.UNICODE)
 RE_CONTROL = re.compile(r"[\t\r\n]")
-
-# Java/Spark regex equivalents (Java regex dialect differs from Python's):
-JAVA_NON_ALPHA_RUN = r"[^\p{L}]+"
 
 
 # --- pure-Python canonical implementations ---------------------------------
@@ -82,50 +76,6 @@ def strip_non_alpha(text: str) -> str:
 def clean_for_sink(text: str) -> str:
     """F8 — NUL removed, tab/CR/LF → space (JDBC/TSV sink hygiene)."""
     return RE_CONTROL.sub(" ", text.replace("\x00", ""))
-
-
-def normalizer_chain(text: str) -> str:
-    """F3→F5→F2 chain (the lang-id pre-detection normalizer,
-    TikaOpenNLPDetector.java:68-75 normalizer list, minus emoji/twitter
-    classes which reduce to the non-alpha strip for our corpus)."""
-    return normalize_ws(strip_non_alpha(strip_emails(strip_urls(text))))
-
-
-# --- vectorized pandas variants (hot path inside mapInPandas) ---------------
-def collapse_newlines_series(s: pd.Series) -> pd.Series:
-    return s.str.replace(RE_NEWLINES, "\n", regex=True).str.strip()
-
-
-def clean_for_sink_series(s: pd.Series) -> pd.Series:
-    return s.str.replace("\x00", "", regex=False).str.replace(
-        RE_CONTROL, " ", regex=True
-    )
-
-
-# --- Spark Column variants (JVM-side, codegen) ------------------------------
-def collapse_newlines_col(c: Column) -> Column:
-    return F.trim(F.regexp_replace(c, r"\n+", "\n"))
-
-
-def normalize_ws_col(c: Column) -> Column:
-    return F.trim(F.regexp_replace(c, r"\s+", " "))
-
-
-def strip_urls_col(c: Column) -> Column:
-    return F.regexp_replace(c, RE_URL.pattern, " ")
-
-
-def strip_emails_col(c: Column) -> Column:
-    return F.regexp_replace(c, RE_EMAIL.pattern, " ")
-
-
-def strip_non_alpha_col(c: Column) -> Column:
-    # Java regex \p{L} ≡ Python [^\W\d_]; ideographs are in \p{L} in Java.
-    return F.regexp_replace(c, JAVA_NON_ALPHA_RUN, " ")
-
-
-def clean_for_sink_col(c: Column) -> Column:
-    return F.regexp_replace(F.regexp_replace(c, "\x00", ""), "[\\t\\r\\n]", " ")
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,9 @@ The reference records both Tika detection and ``file -b --mime-type``
 (eval-addons/.../MimeAndDigester.java:162-187, FileMime.java:19-54), with
 exception sentinels instead of failures. Our payloads live in the ``text``
 column, so detection is magic-prefix + structure heuristics over the string —
-pure column expressions where the caller wants JVM-side speed, and a
-vectorized pandas variant for the extraction hot path.
+pure column expressions where the caller wants JVM-side speed. The
+extraction hot path (operators/extract_arrow.py) re-expresses
+``sniff_one`` as pyarrow masks with the same priority.
 
 Sentinel vocabulary mirrors the reference: detection never throws; unknown →
 ``text/plain``; null/empty → ``application/octet-stream``.
@@ -15,7 +16,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -41,18 +41,6 @@ DATA_URI_7Z = "data:application/x-7z-compressed;base64,"
 DATA_URI_COMPRESS = "data:application/x-compress;base64,"
 DATA_URI_LZ4 = "data:application/x-lz4;base64,"
 DATA_URI_SNAPPY = "data:application/x-snappy-framed;base64,"
-
-# unreliable types the reference refuses to trust for renames
-# (bugtracker-crawler/.../Step2ExtensionFixer.java:52-58)
-UNRELIABLE_MIMES = frozenset(
-    {
-        "text/plain",
-        "application/octet-stream",
-        "application/mbox",
-        "message/rfc822",
-        "text/x-matlab",
-    }
-)
 
 _RE_HTML = re.compile(r"^\s*(?:<!doctype\s+html|<html[\s>])", re.IGNORECASE)
 _RE_HTMLISH = re.compile(
@@ -96,31 +84,9 @@ def sniff_one(text: str | None) -> str:
     return MIME_PLAIN
 
 
-def sniff_series(s: pd.Series) -> pd.Series:
-    """Vectorized sniff over a string Series (no per-row Python)."""
-    head = s.str.slice(0, 4096)
-    out = pd.Series(MIME_PLAIN, index=s.index, dtype=object)
-    out[head.str.contains(_RE_MTEXT, na=False)] = MIME_MTEXT
-    is_htmlish = head.str.contains(_RE_HTMLISH, na=False) | head.str.contains(
-        _RE_HTML, na=False
-    )
-    out[is_htmlish] = MIME_HTML
-    out[head.str.match(_RE_XML, na=False)] = MIME_XML
-    lstripped = head.str.lstrip()
-    out[lstripped.str.startswith("%PDF-", na=False)] = MIME_PDF
-    out[lstripped.str.startswith(DATA_URI_ZIP, na=False)] = MIME_ZIP
-    out[lstripped.str.startswith(DATA_URI_GZIP, na=False)] = MIME_GZIP
-    out[lstripped.str.startswith(DATA_URI_7Z, na=False)] = MIME_7Z
-    out[lstripped.str.startswith(DATA_URI_COMPRESS, na=False)] = MIME_COMPRESS
-    out[lstripped.str.startswith(DATA_URI_LZ4, na=False)] = MIME_LZ4
-    out[lstripped.str.startswith(DATA_URI_SNAPPY, na=False)] = MIME_SNAPPY
-    out[s.isna() | (s.str.len() == 0)] = MIME_EMPTY
-    return out
-
-
 def sniff_col(c: Column) -> Column:
     """JVM-side prefix-only sniff (cheap declarative variant; the full
-    heuristic lives in the pandas path). Useful for partition routing and as
+    heuristic is ``sniff_one``). Useful for partition routing and as
     a DuckDB-comparable query."""
     head = F.substring(c, 1, 4096)
     stripped = F.ltrim(head)

@@ -18,9 +18,9 @@ Semantics pinned by the reference:
 - token entropy — ``-Σ p·log2(p)`` over the token count distribution
   (tika-eval TokenEntropy, surfaced at ``TikaEvalDocMapper.java:289-292``).
 
-Each stat has a pure-Python canonical form and, where the expression is
-JVM-representable, a Spark Column form (used by the declarative queries and
-checked against a DuckDB oracle).
+Each stat has a pure-Python canonical form; the tokenizer also has a Spark
+Column form (``tokens_col``, used by the declarative queries and checked
+against a DuckDB oracle).
 """
 
 from __future__ import annotations
@@ -81,7 +81,7 @@ def text_profile_digest(text: str) -> str:
     return hashlib.sha256(blob.encode("utf-8")).hexdigest()
 
 
-# --- scalar stats (pure python; mirrored as column exprs below) -------------
+# --- scalar stats ------------------------------------------------------------
 def count_alpha_codepoints(text: str) -> int:
     return len(RE_ALPHA_CP.findall(text))
 
@@ -90,31 +90,9 @@ def count_non_ws_codepoints(text: str) -> int:
     return len(RE_NON_WS_CP.findall(text))
 
 
-def token_count(text: str) -> int:
-    return len(tokens_of(text))
-
-
 def token_entropy(text: str) -> float:
     counts = Counter(tokens_of(text))
     n = sum(counts.values())
     if n == 0:
         return 0.0
     return -sum((c / n) * math.log2(c / n) for c in counts.values())
-
-
-# --- Spark column forms ------------------------------------------------------
-def alpha_codepoints_col(c: Column) -> Column:
-    return F.length(F.regexp_replace(c, r"[^\p{L}]", ""))
-
-
-def non_ws_codepoints_col(c: Column) -> Column:
-    return F.length(F.regexp_replace(c, r"\s", ""))
-
-
-def token_count_col(colname: str) -> Column:
-    return F.size(tokens_col(colname))
-
-
-def sha256_col(c: Column) -> Column:
-    """F9 — sha256 hex digest (MimeAndDigester.java:166-168)."""
-    return F.sha2(c, 256)

@@ -1,23 +1,24 @@
-"""The extraction operator: Arrow-batched mapInPandas over transcript turns.
+"""The extraction operator: Arrow-batched mapInArrow over transcript turns.
 
 Spark-first design (SURVEY.md §3.1 trace): the logical plan is
 
     scan(transcripts)                      -- Iceberg/parquet, pruned columns
       → repartition(bucketed conv_id [+salt for whales])
       → sortWithinPartitions(conv_id, turn_idx)   -- deterministic order (W2)
-      → mapInPandas(extract_batches)              -- THIS operator
+      → mapInArrow(extract_batches_arrow)         -- THIS operator
       → sink (+ checkpoint/metrics)
 
-``extract_batches`` is an iterator-of-batches UDF (amortizes per-batch setup,
-mirroring the reference's "expensive DocMapper — only use one",
+There is one extraction contract: ``oracle.extract_one`` is the per-turn
+spec, and ``extract_arrow.extract_batch_arrow`` is the only engine path.
+``extract_batches_arrow`` is an iterator-of-batches UDF (amortizes per-batch
+setup, mirroring the reference's "expensive DocMapper — only use one",
 ``tika-eval-solrj/.../Indexer.java:144-145``). Inside a batch:
 
-- content sniffing and the plain-text path are **vectorized** pandas str ops
-  (no per-row Python) — the majority of turns;
-- HTML / PDF-ish / markup-code turns run the pure-Python kernels from
-  operators/html.py, operators/payload.py, functions/cleaners.py — the same
-  functions the standalone oracle uses, so engine ≡ oracle by construction
-  and pytest verifies it stays that way.
+- content sniffing and the plain-text path are **vectorized** pyarrow
+  compute kernels (no per-row Python) — the majority of turns;
+- HTML / PDF-ish / markup-code / archive turns run ``oracle.extract_one``
+  itself, so engine ≡ oracle by construction and pytest verifies it stays
+  that way (tests/test_extract_engine.py, tests/test_properties.py).
 
 Per-record failure isolation: the kernels are total functions; a poison turn
 yields ``parse_status='rejected'`` + warnings, never a task failure
@@ -31,111 +32,19 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..functions import normalize, sniff
-from ..oracle import MAX_EXTRACTED_CHARS, extract_one
-from ..schema import EXTRACTED_SCHEMA, STATUS_REJECTED, STATUS_VALID, STATUS_VALID_WARNINGS
-
-PASSTHROUGH = ["conv_id", "turn_idx", "role", "ts"]
-OUT_COLS = [f.name for f in EXTRACTED_SCHEMA.fields]
-
-
-def _extract_plain_vectorized(texts: pd.Series) -> pd.DataFrame:
-    """Vectorized plain/xml path — must match oracle.extract_one exactly
-    (asserted by tests/test_extract_engine.py)."""
-    body = (
-        texts.fillna("")
-        .str.replace("\x00", "", regex=False)
-        .str.replace("\t", " ", regex=False)
-        .str.replace("\r", " ", regex=False)
-    )
-    body = body.str.replace(normalize.RE_NEWLINES, "\n", regex=True).str.strip()
-    truncated = body.str.len() > MAX_EXTRACTED_CHARS
-    body = body.str.slice(0, MAX_EXTRACTED_CHARS)
-    empty = texts.isna() | (texts.str.strip().str.len() == 0)
-
-    out = pd.DataFrame(index=texts.index)
-    out["extracted_text"] = body.where(~empty, "")
-    out["title"] = None
-    out["meta"] = [{} for _ in range(len(texts))]
-    n = pd.to_numeric(texts.str.len(), errors="coerce").fillna(0).astype("int64")
-    out["spans"] = [
-        [] if e else [{"kind": "main", "start": 0, "end": int(ln)}]
-        for e, ln in zip(empty, n)
-    ]
-    out["detected_content_type"] = sniff.sniff_series(texts)
-    out["warnings"] = [
-        ["empty-content"] if e else (["truncated"] if t else [])
-        for e, t in zip(empty, truncated)
-    ]
-    out["parse_status"] = STATUS_VALID
-    out.loc[truncated & ~empty, "parse_status"] = STATUS_VALID_WARNINGS
-    out.loc[empty, "parse_status"] = STATUS_REJECTED
-    out["chars_in"] = n.astype("int32")
-    out["chars_out"] = out["extracted_text"].str.len().astype("int32")
-    out["n_pages"] = pd.array([None] * len(texts), dtype="Int32")
-    return out
-
-
-def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Extract one Arrow batch. Routes rows by sniffed type."""
-    texts = pdf["text"]
-    ctype = sniff.sniff_series(texts)
-    # rows needing the python kernels: html/pdf/mtext/archive, plus plain
-    # rows that embed xpacket packets (span scan) — everything else is
-    # vectorized.
-    needs_kernel = ctype.isin(
-        [sniff.MIME_HTML, sniff.MIME_PDF, sniff.MIME_MTEXT,
-         sniff.MIME_ZIP, sniff.MIME_GZIP, sniff.MIME_7Z,
-         sniff.MIME_COMPRESS, sniff.MIME_LZ4, sniff.MIME_SNAPPY]
-    )
-    needs_kernel |= texts.str.contains("<?xpacket begin=", regex=False, na=False)
-
-    parts = []
-    if (~needs_kernel).any():
-        parts.append(_extract_plain_vectorized(texts[~needs_kernel]))
-    if needs_kernel.any():
-        kernel_rows = [
-            extract_one(None if t is None or t is pd.NA else t)
-            for t in texts[needs_kernel]
-        ]
-        kdf = pd.DataFrame(kernel_rows, index=texts.index[needs_kernel])
-        kdf["chars_in"] = kdf["chars_in"].astype("int32")
-        kdf["chars_out"] = kdf["chars_out"].astype("int32")
-        kdf["n_pages"] = kdf["n_pages"].astype("Int32")
-        parts.append(kdf)
-    out = pd.concat(parts).loc[texts.index]
-    out["n_pages"] = out["n_pages"].astype("Int32")
-
-    for col in PASSTHROUGH:
-        if col in pdf.columns:
-            out[col] = pdf[col]
-        else:
-            out[col] = None
-    return out[OUT_COLS]
-
-
-def extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield extract_batch(pdf)
+from ..functions import sniff
+from ..schema import EXTRACTED_SCHEMA
+from .extract_arrow import PASSTHROUGH, extract_batches_arrow
 
 
 def extract_turns(df: DataFrame) -> DataFrame:
     """Declarative entry: transcripts DataFrame → extracted DataFrame.
 
-    Delegates to the Arrow-native hot path (extract_arrow.py, mapInArrow):
-    plain/xml turns never materialize Python strings; kernel turns run the
-    same oracle.extract_one as the pandas twin below. Byte-identical output
-    is asserted by tests/test_extract_engine.py."""
-    from .extract_arrow import extract_turns_arrow
-
-    return extract_turns_arrow(df)
-
-
-def extract_turns_pandas(df: DataFrame) -> DataFrame:
-    """The mapInPandas twin (readability/reference variant; also the kernel
-    the pure-Python ceiling control in bench/hw_ceiling.py measures)."""
+    Plain/xml turns never materialize Python strings; kernel turns run
+    oracle.extract_one. Equality with the oracle over the full fixture
+    corpus is asserted by tests/test_extract_engine.py."""
     cols = [c for c in PASSTHROUGH if c in df.columns] + ["text"]
-    return df.select(*cols).mapInPandas(extract_batches, schema=EXTRACTED_SCHEMA)
+    return df.select(*cols).mapInArrow(extract_batches_arrow, schema=EXTRACTED_SCHEMA)
 
 
 def extract_embedded_turns(df: DataFrame) -> DataFrame:

@@ -1,18 +1,18 @@
 """Arrow-native extraction hot path (mapInArrow, zero pandas in the loop).
 
-Motivation (round-2 measurement): at local[32] the pandas mapInPandas
-extractor realizes ~66% of the pure-Python process-pool ceiling; a large
-share of the gap is Arrow→pandas materialization — every turn's text becomes
-a Python object even when its processing is then fully vectorized. This
-module keeps the majority path (plain/xml turns) entirely inside pyarrow
-compute kernels (C++, no Python objects), and materializes Python strings
-ONLY for the rows that need the pure-Python kernels (html/pdf/mtext/archive
-/xpacket — the same ``oracle.extract_one`` the pandas path uses, so
-engine ≡ oracle still holds by construction and is asserted by tests).
+Motivation (round-2 measurement): at local[32] a mapInPandas extractor
+realized ~66% of the pure-Python process-pool ceiling; a large share of the
+gap was Arrow→pandas materialization — every turn's text becomes a Python
+object even when its processing is then fully vectorized. This module keeps
+the majority path (plain/xml turns) entirely inside pyarrow compute kernels
+(C++, no Python objects), and materializes Python strings ONLY for the rows
+that need the pure-Python kernels (html/pdf/mtext/archive/xpacket), which
+run ``oracle.extract_one`` itself, so engine ≡ oracle holds by construction.
 
-Semantics contract: byte-identical to ``extract.extract_batch`` /
-``oracle.extract_one`` for every input (asserted over the full fixture
-corpus by tests/test_extract_engine.py::test_arrow_path_equals_pandas_path).
+Semantics contract: byte-identical to ``oracle.extract_one`` for every
+input (asserted over the full fixture corpus by
+tests/test_extract_engine.py and on adversarial inputs by
+tests/test_properties.py::test_arrow_kernel_equals_oracle).
 The subtle bits:
 
 - codepoint semantics: ``pc.utf8_length`` / ``pc.utf8_slice_codeunits``
@@ -54,8 +54,6 @@ _PY_WS = "".join(
         + [0x2028, 0x2029, 0x202F, 0x205F, 0x3000]
     )
 )
-_LSTRIP_RE = f"^[{_PY_WS}]+"
-_RSTRIP_RE = f"[{_PY_WS}]+$"
 _ONLY_WS_RE = f"^[{_PY_WS}]*$"
 
 # sniff regexes in RE2 dialect ((?i) replaces re.IGNORECASE). The \s here
@@ -170,7 +168,7 @@ def _clean_plain_one(s: str) -> tuple[str, bool]:
     """Per-row Python twin of the small-lane kernel chain: returns
     (output text, truncated). Byte-identical to the pc chain (the
     equivalence of each step is pinned by tests/test_extract_engine.py's
-    arrow==pandas==oracle corpus assertions plus the adversarial cases in
+    arrow==oracle corpus assertions plus the adversarial cases in
     test_plain_lanes.py).
 
     Fast path for long mostly-clean rows (the common whale shape): strip
@@ -217,8 +215,8 @@ def _clean_plain_small(body: pa.Array) -> pa.Array:
 
 
 def _extract_plain_arrow(text: pa.Array) -> dict[str, pa.Array]:
-    """The vectorized plain/xml path — pyarrow twin of
-    extract._extract_plain_vectorized (which itself matches extract_one).
+    """The vectorized plain/xml path — matches oracle.extract_one on every
+    row the router sends here.
 
     Round-6 lane split: the fixture corpus is bimodal — a large majority
     of sub-KB rows plus ~2% whale rows of >100k codepoints that carry
@@ -313,7 +311,7 @@ def _extract_plain_arrow(text: pa.Array) -> dict[str, pa.Array]:
 
 def _extract_kernel_rows(texts: list) -> dict[str, pa.Array]:
     """html/pdf/mtext/archive/xpacket rows through the canonical pure-Python
-    kernel (oracle.extract_one) — identical to the pandas path."""
+    kernel (oracle.extract_one)."""
     rows = [extract_one(t if isinstance(t, str) else None) for t in texts]
     return {
         "extracted_text": pa.array([r["extracted_text"] for r in rows], pa.string()),
@@ -405,11 +403,3 @@ def extract_batches_arrow(
     for rb in batches:
         yield extract_batch_arrow(rb)
 
-
-def extract_turns_arrow(df):
-    """Declarative entry: transcripts DataFrame → extracted DataFrame via
-    mapInArrow (the default hot path; the pandas twin stays in extract.py
-    as the readability/fallback variant and the pure-Python ceiling
-    control's kernel)."""
-    cols = [c for c in PASSTHROUGH if c in df.columns] + ["text"]
-    return df.select(*cols).mapInArrow(extract_batches_arrow, schema=EXTRACTED_SCHEMA)

@@ -26,8 +26,9 @@ showed html.parser's per-character state machine at ~0.44 ms/document,
 events for well-formed markup. Character **spans are offsets into the
 original string** (kind ``main`` per kept block, ``title`` for the title).
 
-This module is pure Python: it is the per-string kernel that the Arrow/pandas
-UDF batches over (operators/extract.py), and doubles as the standalone oracle.
+This module is pure Python: it is the per-string kernel that the Arrow UDF
+batches over (operators/extract_arrow.py, through the oracle), and doubles as
+the standalone oracle.
 """
 
 from __future__ import annotations
@@ -123,8 +124,6 @@ _TAG_RE = re.compile(
 _ATTR_RE = re.compile(
     r"([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]*)))?"
 )
-# tags we need attributes for; everything else skips attr parsing entirely
-_ATTR_TAGS = frozenset({"meta", "tr"})
 
 
 def _parse_attrs(raw_attrs: str) -> list[tuple[str, str | None]]:

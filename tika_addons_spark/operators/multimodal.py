@@ -33,15 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("sha256", T.StringType(), False),
-        T.StructField("magic", T.StringType(), True),
-    ]
-)
-
 FEATURE_DIM = 16
 
 # single source of truth for magic-prefix detection: BOTH the pure-Python
@@ -270,6 +261,15 @@ _ADAM7 = [
 ]
 
 
+def _adam7_passes(width: int, height: int):
+    """(x0, y0, dx, dy, w_p, h_p) of each non-empty Adam7 reduced image."""
+    for x0, y0, dx, dy in _ADAM7:
+        w_p = (width - x0 + dx - 1) // dx
+        h_p = (height - y0 + dy - 1) // dy
+        if w_p and h_p:
+            yield x0, y0, dx, dy, w_p, h_p
+
+
 def _filter_image(px: "np.ndarray", bpp: int) -> bytearray:
     """Filter a (h, w*bpp-flattened) pixel array into PNG scanline bytes,
     cycling filter types 0..4 so decoders must implement real unfiltering."""
@@ -305,10 +305,8 @@ def make_png(
         bpp = 3
         if interlace:
             raw = bytearray()
-            for x0, y0, dx, dy in _ADAM7:
+            for x0, y0, dx, dy, *_ in _adam7_passes(width, height):
                 sub = px[y0::dy, x0::dx]
-                if sub.size == 0:
-                    continue
                 raw += _filter_image(
                     sub.reshape(sub.shape[0], -1), bpp
                 )
@@ -1905,6 +1903,8 @@ def decode_png(payload: bytes) -> "np.ndarray | None":
     import struct
     import zlib
 
+    from .binarchive import DEFAULT_MAX_MEMBER_BYTES
+
     try:
         b = payload
         if not b.startswith(b"\x89PNG\r\n\x1a\n"):
@@ -1929,7 +1929,23 @@ def decode_png(payload: bytes) -> "np.ndarray | None":
         channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color)
         if channels is None:
             return None
-        raw = zlib.decompress(b"".join(idat))
+        # Bound the inflate by the filtered size IHDR implies before any
+        # allocation: a small IDAT can inflate to gigabytes, and a tiny
+        # file can claim a huge canvas. The Adam7 pass sizes sum to at
+        # least w*h*channels, so this also caps the canvas below.
+        if interlace == 0:
+            expected = (width * channels + 1) * height
+        else:
+            expected = sum(
+                (w_p * channels + 1) * h_p
+                for *_, w_p, h_p in _adam7_passes(width, height)
+            )
+        if expected > DEFAULT_MAX_MEMBER_BYTES:
+            return None
+        inflate = zlib.decompressobj()
+        raw = inflate.decompress(b"".join(idat), expected + 1)
+        if len(raw) != expected or not inflate.eof:
+            return None
 
         def unfilter_image(data: bytes, w: int, h: int) -> "np.ndarray":
             stride = w * channels
@@ -1951,16 +1967,10 @@ def decode_png(payload: bytes) -> "np.ndarray | None":
         # back onto the full-resolution grid (RFC 2083 §8.2)
         out = np.zeros((height, width, channels), dtype=np.uint8)
         pos = 0
-        for x0, y0, dx, dy in _ADAM7:
-            w_p = (width - x0 + dx - 1) // dx
-            h_p = (height - y0 + dy - 1) // dy
-            if w_p == 0 or h_p == 0:
-                continue
+        for x0, y0, dx, dy, w_p, h_p in _adam7_passes(width, height):
             n = (w_p * channels + 1) * h_p
             out[y0::dy, x0::dx] = unfilter_image(raw[pos : pos + n], w_p, h_p)
             pos += n
-        if pos != len(raw):
-            return None
         return out
     except Exception:
         return None

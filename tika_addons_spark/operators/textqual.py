@@ -58,18 +58,6 @@ def quality_features(text_col: str) -> dict[str, Column]:
     }
 
 
-def quality_score(text_col: str) -> Column:
-    """Composite [0,1] quality score: rewards distinct-token diversity and a
-    sane stopword presence, penalizes extreme punctuation density."""
-    f = quality_features(text_col)
-    diversity = F.when(
-        f["n_tokens"] > 0, f["n_distinct_tokens"] / f["n_tokens"].cast("double")
-    ).otherwise(0.0)
-    stop = F.least(f["stopword_ratio"] * 4, F.lit(1.0))
-    punct_pen = F.greatest(F.lit(0.0), F.lit(1.0) - f["punct_ratio"] * 5)
-    return F.round((diversity + stop + punct_pen) / 3.0, 4)
-
-
 def token_fingerprint(text_col: str) -> Column:
     """Document fingerprint: sha256 over the sorted distinct token set —
     the set analogue of the reference's bag-of-words equality

@@ -88,14 +88,3 @@ CHECKPOINT_SCHEMA = T.StructType(
         T.StructField("finished_ts", T.TimestampType(), True),
     ]
 )
-
-# Per-run metrics rollup (reference throughput hooks:
-# MetadataWriter.java:109-111, MimeAndDigester.java:241-246).
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("metric", T.StringType(), False),
-        T.StructField("key", T.StringType(), True),
-        T.StructField("value", T.LongType(), False),
-    ]
-)

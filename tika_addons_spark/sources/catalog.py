@@ -34,16 +34,6 @@ EXTRACTED_TABLE_SCHEMA = T.StructType(
 )
 
 
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
-        )
-        return True
-    except Exception:
-        return False
-
-
 def read_transcripts(spark: SparkSession, source: str) -> DataFrame:
     """Read the transcripts table. ``source`` is an Iceberg table name
     (``cat.db.transcripts``) or a parquet path. Schema is declared, never
