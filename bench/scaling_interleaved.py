@@ -1,22 +1,24 @@
 """Interleaved scaling-efficiency measurement for noisy shared-tenant hosts.
 
-`bench/scaling.py` runs all local[8] passes, then all local[32] passes —
+`bench/scaling.py` runs all low-level passes, then all high-level passes —
 minutes apart, so on a host with bursty co-tenants the two levels often
-sample DIFFERENT noise regimes and the ratio is garbage (round-4 window E:
-the 8-core phase ran quiet, a burst arrived for the 32-core phase, and the
-"efficiency" read 0.53 despite nothing changing in the engine).
+sample DIFFERENT noise regimes and the ratio is garbage (round-4 window E,
+local[8] vs local[32]: the 8-core phase ran quiet, a burst arrived for the
+32-core phase, and the "efficiency" read 0.53 despite nothing changing in
+the engine).
 
 This harness keeps BOTH pinned JVMs alive and alternates single timed
-passes: pass i at local[8] is immediately followed by pass i at local[32],
-so each PAIR shares (approximately) one noise regime and yields its own
-efficiency estimate. Reported: per-pair efficiencies, their max/median, and
-the classic best-of-N ratio — all raw samples printed.
+passes: pass i at local[low] is immediately followed by pass i at
+local[high], so each PAIR shares (approximately) one noise regime and
+yields its own efficiency estimate. Reported: per-pair efficiencies, their
+max/median, and the classic best-of-N ratio — all raw samples printed.
 
-The 8-core worker is pinned to cores 0-7 and the 32-core worker to 0-31;
-they never run simultaneously (the driver strictly alternates), the idle
-JVM costs only parked threads.
+The levels default to N/4 and N, N = the cores this process may run on
+(what ``nproc`` prints). Each worker is pinned to the first ``cores`` of
+them; they never run simultaneously (the driver strictly alternates), the
+idle JVM costs only parked threads.
 
-Usage:  python bench/scaling_interleaved.py [--pairs 6]
+Usage:  python bench/scaling_interleaved.py [--pairs 6] [--low L --high H]
 """
 
 from __future__ import annotations
@@ -32,6 +34,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 WARMUPS = 7
+# the cores this process may run on, lowest first (what `nproc` counts)
+CPUS = sorted(os.sched_getaffinity(0))
 
 WORKER = r"""
 import json, sys, time
@@ -61,7 +65,7 @@ class _Worker:
     def __init__(self, cores: int, path: str):
         self.cores = cores
         self.proc = subprocess.Popen(
-            ["taskset", "-c", f"0-{cores - 1}", sys.executable, "-c",
+            ["taskset", "-c", ",".join(map(str, CPUS[:cores])), sys.executable, "-c",
              WORKER.format(repo=REPO), str(cores), path, str(WARMUPS)],
             stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
         )
@@ -92,8 +96,8 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pairs", type=int, default=6)
     ap.add_argument("--n-convs", type=int, default=160_000)
-    ap.add_argument("--low", type=int, default=8)
-    ap.add_argument("--high", type=int, default=32)
+    ap.add_argument("--low", type=int, default=max(1, len(CPUS) // 4))
+    ap.add_argument("--high", type=int, default=len(CPUS))
     # opportunistic mode: wait out co-tenant bursts — fire a pair only when
     # the 1-min load is below --load-threshold, sleeping otherwise, until
     # --pairs clean pairs are collected or --max-minutes elapses. On a host
@@ -109,7 +113,7 @@ def main() -> None:
         from tika_addons_spark.fixtures import generate_transcripts_spark
         from tika_addons_spark.session import get_spark
 
-        spark = get_spark(app_name="gen", master="local[32]")
+        spark = get_spark(app_name="gen", master=f"local[{len(CPUS)}]")
         os.makedirs(os.path.dirname(cache), exist_ok=True)
         generate_transcripts_spark(spark, args.n_convs, seed=42).write.mode(
             "overwrite"
@@ -141,7 +145,7 @@ def main() -> None:
         load1 = round(os.getloadavg()[0], 1)
         eff = (r_hi / r_lo) / (args.high / args.low)
         pairs.append(
-            {"pair": i, "r8": round(r_lo), "r32": round(r_hi),
+            {"pair": i, "r_low": round(r_lo), "r_high": round(r_hi),
              "eff": round(eff, 3), "load_before": load_before, "load1": load1}
         )
         print(json.dumps(pairs[-1]), flush=True)
@@ -155,7 +159,7 @@ def main() -> None:
         return
 
     effs = [p["eff"] for p in pairs]
-    best_ratio = (max(p["r32"] for p in pairs) / max(p["r8"] for p in pairs)) / (
+    best_ratio = (max(p["r_high"] for p in pairs) / max(p["r_low"] for p in pairs)) / (
         args.high / args.low
     )
     summary = {

@@ -329,6 +329,28 @@ def test_png_decompression_bomb_is_bounded():
         assert peak <= 16 * 1024 * 1024, (len(png), peak)
 
 
+def test_jpeg_header_size_claim_is_bounded():
+    """decode_jpeg bounds its allocations by the decoded size SOF implies
+    (h x w x components), never by what the header claims: a 16x16 JPEG
+    whose SOF is patched to claim 16384x16384 or 65535x65535 must return
+    None with a small traced peak, before any coefficient plane exists."""
+    import tracemalloc
+
+    good = multimodal.make_jpeg(16, 16)
+    sof = good.index(b"\xff\xc0")
+    for side in (16384, 65535):
+        dims = side.to_bytes(2, "big") * 2  # height, width
+        crafted = good[: sof + 5] + dims + good[sof + 9 :]
+        assert len(crafted) == len(good)
+        tracemalloc.start()
+        try:
+            assert multimodal.decode_jpeg(crafted) is None
+            _cur, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert peak <= 16 * 1024 * 1024, (side, peak)
+
+
 def test_gif_interlaced_decode_exact():
     """GIF89a 4-pass interlacing: rows stored in pass order must scatter
     back to exactly the source pixels."""

@@ -195,6 +195,34 @@ def test_fresh_checkpoint_starts_no_job(spark, tmp_path):
     assert keys == []
 
 
+def test_missing_checkpoint_is_probed_not_read(spark, tmp_path, monkeypatch):
+    """A missing checkpoint is found by asking the path's Hadoop FileSystem,
+    never by letting a parquet read fail (which logged an ERROR and two
+    stack traces per fresh run); an existing one is still read, and a path
+    no FileSystem can serve still raises."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from tika_addons_spark.schema import CHECKPOINT_SCHEMA
+
+    existing = str(tmp_path / "ckpt")
+    catalog.append_checkpoint(catalog.checkpoint_frame(spark, []), existing)
+
+    def no_read(self, *paths, **kw):
+        raise AssertionError(f"parquet read of {paths}")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", no_read)
+    ck = catalog.read_checkpoint(spark, str(tmp_path / "no-such-ckpt"))
+    assert ck.schema == CHECKPOINT_SCHEMA and ck.collect() == []
+    with pytest.raises(AssertionError, match="parquet read"):
+        catalog.read_checkpoint(spark, existing)
+    monkeypatch.undo()
+
+    assert catalog.read_checkpoint(spark, existing).collect() == []
+    with pytest.raises(Py4JJavaError, match="No FileSystem for scheme"):
+        catalog.read_checkpoint(spark, "nosuchscheme://bucket/ckpt")
+
+
 def test_checkpoint_frame_matches_python_rows(spark):
     """checkpoint_frame (Arrow, no Python RDD) yields the same rows and
     schema as createDataFrame over the equivalent Python tuple."""

@@ -18,9 +18,21 @@ citations.
 
 __version__ = "0.1.0"
 
+import sys  # noqa: E402
+
 # Every Spark Python worker that runs an engine UDF imports this package, so
-# this is where the worker-side fix for PySpark's per-task zip re-reads goes
-# (see zipcache.py; a no-op on Python >= 3.12).
+# this is where the worker-side fixes for PySpark's fixed cost per task go.
+# zipcache: per-task zip re-reads (a no-op on Python >= 3.12).
 from . import zipcache as _zipcache  # noqa: E402
 
 _zipcache.install()
+
+# workergc: the between-task gc.collect(), only when imported inside a task
+# so the driver's collector is left as it is. A process that has not
+# imported pyspark.taskcontext runs no task and need not pay pyspark's
+# import.
+_taskcontext = sys.modules.get("pyspark.taskcontext")
+if _taskcontext is not None and _taskcontext.TaskContext.get() is not None:
+    from . import workergc as _workergc
+
+    _workergc.install()

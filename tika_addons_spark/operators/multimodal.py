@@ -1513,6 +1513,8 @@ def decode_jpeg(payload: bytes) -> "np.ndarray | None":
     real-world 4:2:0), interleaved and per-component scans, restart
     intervals (DRI + RSTn, predictors and EOB runs reset per segment).
     Arithmetic / hierarchical / 12-bit → None, never raises."""
+    from .binarchive import DEFAULT_MAX_MEMBER_BYTES
+
     try:
         b = payload
         if not b.startswith(b"\xff\xd8"):
@@ -1770,6 +1772,10 @@ def decode_jpeg(payload: bytes) -> "np.ndarray | None":
                     # grid (T.81 A.2.2)
                     comps = [(comps[0][0], 1, 1, comps[0][3])]
                 if h == 0 or w == 0 or len(comps) not in (1, 3):
+                    return None
+                # the decoded size SOF implies bounds every allocation
+                # below; a few header bytes can claim a 65535x65535 frame
+                if h * w * len(comps) > DEFAULT_MAX_MEMBER_BYTES:
                     return None
                 frame = (h, w, comps, marker == 0xC2)
                 hmax = max(c[1] for c in comps)

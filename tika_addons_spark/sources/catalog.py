@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.utils import AnalysisException
 
 from ..schema import CHECKPOINT_SCHEMA, EXTRACTED_SCHEMA, TRANSCRIPTS_SCHEMA
 
@@ -97,21 +96,16 @@ def append_checkpoint(df: DataFrame, ckpt: str) -> None:
 
 def read_checkpoint(spark: SparkSession, ckpt: str) -> DataFrame:
     if _is_path(ckpt):
-        # existence via the read itself, not os.path: a driver-local exists()
-        # check is wrong for s3://, hdfs://... URIs — an existing remote
-        # checkpoint would silently read as empty and resume would redo all
-        # buckets (and double-write the output).
-        try:
-            return spark.read.schema(CHECKPOINT_SCHEMA).parquet(ckpt)
-        except AnalysisException as e:
-            # ONLY a missing path means "fresh run". Any other analysis
-            # failure (permissions, malformed URI, schema conflict) on an
-            # existing checkpoint must surface — swallowing it would resume
-            # from scratch and double-write the output, the exact failure
-            # this probe exists to prevent.
-            if _is_path_not_found(e):
-                return checkpoint_frame(spark, [])
-            raise
+        # A missing checkpoint means a fresh run. Ask the Hadoop FileSystem
+        # of the path's scheme, not os.path: a driver-local exists() is wrong
+        # for s3://, hdfs://... URIs, where an existing remote checkpoint
+        # would read as empty and resume would redo all buckets (and
+        # double-write the output). Nor by letting the read fail: Spark logs
+        # an ERROR and two stack traces for it. Any other failure
+        # (permissions, an unknown scheme) surfaces.
+        if not _path_exists(spark, ckpt):
+            return checkpoint_frame(spark, [])
+        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(ckpt)
     return spark.read.table(ckpt)
 
 
@@ -128,20 +122,6 @@ def checkpoint_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
     return spark.createDataFrame(table, CHECKPOINT_SCHEMA)
 
 
-def _is_path_not_found(e: AnalysisException) -> bool:
-    try:
-        klass = e.getCondition()  # PySpark ≥4 name; getErrorClass is deprecated
-    except Exception:
-        try:
-            klass = e.getErrorClass()
-        except Exception:
-            klass = None
-    if klass == "PATH_NOT_FOUND":
-        return True
-    msg = str(e)
-    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-
-
 def completed_keys(spark: SparkSession, ckpt: str, run_id: str) -> DataFrame:
     """Distinct partition_keys already completed for this run_id.
 
@@ -153,6 +133,12 @@ def completed_keys(spark: SparkSession, ckpt: str, run_id: str) -> DataFrame:
         .select("partition_key")
         .distinct()
     )
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    sc = spark.sparkContext
+    p = sc._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p)
 
 
 def _is_path(target: str) -> bool:
