@@ -1,7 +1,8 @@
-"""Interleaved scaling-efficiency measurement for noisy shared-tenant hosts.
+"""Scaling-efficiency measurement: the same extraction job on the same input
+at local[low] vs local[high], interleaved for noisy shared-tenant hosts.
 
-`bench/scaling.py` runs all low-level passes, then all high-level passes —
-minutes apart, so on a host with bursty co-tenants the two levels often
+Running all low-level passes, then all high-level passes puts the two
+levels minutes apart, so on a host with bursty co-tenants they often
 sample DIFFERENT noise regimes and the ratio is garbage (round-4 window E,
 local[8] vs local[32]: the 8-core phase ran quiet, a burst arrived for the
 32-core phase, and the "efficiency" read 0.53 despite nothing changing in

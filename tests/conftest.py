@@ -8,12 +8,7 @@ from tika_addons_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # with_jdbc: the JDBC round-trip tests share this session, and the
-    # driver jar can only be attached at session build time.
-    s = get_spark(
-        app_name="tests", master="local[4]", shuffle_partitions=4,
-        with_jdbc=True,
-    )
+    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
     yield s
 
 

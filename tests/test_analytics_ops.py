@@ -1,4 +1,4 @@
-"""Dedup family, similarity search, multimodal plumbing, streaming."""
+"""Dedup family, similarity search, multimodal plumbing."""
 
 from __future__ import annotations
 
@@ -481,29 +481,6 @@ def test_real_media_features(spark):
     assert got[3].feature[0] > 0 and abs(got[3].feature[2] - 0.3) < 0.01
     # oracle parity: the Spark row equals the pure kernel on the same bytes
     assert got[1].feature == multimodal.real_feature(rows[0][1])
-
-
-def test_stream_extract_incremental(spark, tmp_path):
-    from tika_addons_spark.fixtures import generate_transcripts
-    from tika_addons_spark.streaming.stream import stream_extract
-
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    pdf = generate_transcripts(n_convs=5, seed=3, whale=False)
-    half = len(pdf) // 2
-    spark.createDataFrame(pdf.iloc[:half]).write.parquet(str(src / "batch1"))
-
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    q = stream_extract(spark, str(src) + "/*", out, ck)
-    q.awaitTermination(120)
-    n1 = spark.read.parquet(out).count()
-    assert n1 == half
-
-    # new file arrives; availableNow picks up ONLY the new one
-    spark.createDataFrame(pdf.iloc[half:]).write.parquet(str(src / "batch2"))
-    q2 = stream_extract(spark, str(src) + "/*", out, ck)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out).count() == len(pdf)
 
 
 def test_wav_16bit_stereo_roundtrip():

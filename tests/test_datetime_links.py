@@ -1,4 +1,4 @@
-"""Report sinks (S5/S9-S13) and date/path scalar functions (F11-F14)."""
+"""Date/path scalar functions (F11-F14) and link harvesting."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tika_addons_spark.functions import datetime_path as dp
-from tika_addons_spark.sources import sinks
 
 
 @pytest.fixture(scope="module")
@@ -19,39 +18,6 @@ def messy(spark):
         ],
         "id long, val string, path string",
     )
-
-
-def test_clean_string_columns(messy):
-    out = sinks.clean_string_columns(messy, max_len=100)
-    rows = {r.id: r for r in out.collect()}
-    assert "\t" not in rows[2].val and "\n" not in rows[2].val
-    assert "\x00" not in rows[2].val
-    assert len(rows[3].val) == 100 and rows[3].val_truncated
-    assert not rows[1].val_truncated
-
-
-def test_tsv_roundtrip(spark, messy, tmp_path):
-    p = str(tmp_path / "report.tsv")
-    sinks.write_tsv(messy.select("id", "val"), p)
-    back = sinks.read_tsv(spark, p, schema="id long, val string, val_truncated boolean")
-    assert back.count() == 3
-    # cells with tabs/newlines were cleaned, so the TSV stays rectangular
-    assert back.filter(F.col("id").isNull()).count() == 0
-
-
-def test_sink_factory(spark, messy, tmp_path):
-    sinks.write_report(messy, str(tmp_path / "r.tsv"))
-    sinks.write_report(messy, str(tmp_path / "r.csv"))
-    sinks.write_report(messy, str(tmp_path / "rjson"))
-    assert spark.read.options(sep="\t", header=True).csv(str(tmp_path / "r.tsv")).count() == 3
-    # CSV keeps embedded newlines (quoted) — readers need multiLine
-    assert (
-        spark.read.options(header=True, multiLine=True, escape='"')
-        .csv(str(tmp_path / "r.csv"))
-        .count()
-        == 3
-    )
-    assert spark.read.json(str(tmp_path / "rjson")).count() == 3
 
 
 def test_date_parse_fallback(spark):
@@ -153,22 +119,6 @@ def test_link_harvest_github_attr_rule(spark):
     }
 
 
-def test_read_jdbc_seam_reaches_jdbc_layer(spark):
-    """No JDBC driver jar ships in the sandbox, so the live read can't run;
-    the seam test asserts the call is wired through to Spark's JDBC layer
-    (which rejects it for want of a driver, not for a bad plan)."""
-    import pytest as _pytest
-
-    from tika_addons_spark.sources import sinks
-
-    with _pytest.raises(Exception, match="(?i)driver|jdbc"):
-        sinks.read_jdbc(
-            spark, "jdbc:postgresql://nohost/db", "t",
-            partition_column="id", lower_bound=0, upper_bound=100,
-            num_partitions=4,
-        )
-
-
 def test_extension_allowlist_predicate(spark):
     df = spark.createDataFrame(
         [("a/b.PDF",), ("c/d.tar.gz",), ("e/f.exe",), ("noext",)], "p string"
@@ -178,22 +128,3 @@ def test_extension_allowlist_predicate(spark):
         for r in df.select(dp.extension_allowed(F.col("p"), {"pdf", "tgz"})).collect()
     ]
     assert got == [True, True, False, False]
-
-
-def test_read_text_lines_gz_and_xz(spark, tmp_path):
-    """S4: gz via the native codec, xz via the lzma mapInPandas path —
-    identical line content either way."""
-    import gzip as _gzip
-    import lzma as _lzma
-
-    lines = ["alpha line", "beta zeile", "gamma ligne"]
-    payload = ("\n".join(lines) + "\n").encode("utf-8")
-    (tmp_path / "t.txt.gz").write_bytes(_gzip.compress(payload))
-    (tmp_path / "t.txt.xz").write_bytes(_lzma.compress(payload))
-
-    from tika_addons_spark.sources.sinks import read_text_lines
-
-    got_gz = [r.value for r in read_text_lines(spark, str(tmp_path / "t.txt.gz")).collect()]
-    got_xz = [r.value for r in read_text_lines(spark, str(tmp_path / "t.txt.xz")).collect()]
-    assert sorted(got_gz) == sorted(lines)
-    assert sorted(got_xz) == sorted(lines)

@@ -1,5 +1,5 @@
 """End-to-end job tests: checkpointed run, kill-and-resume equivalence
-(FIXTURES.md §4), rollups, comparison harness."""
+(FIXTURES.md §4), comparison harness."""
 
 from __future__ import annotations
 
@@ -7,8 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tika_addons_spark.operators.compare import align_runs, equality_gate, sim_sets
-from tika_addons_spark.operators.extract import extract_turns
-from tika_addons_spark.operators.rollup import conversation_rollup, with_position
 from tika_addons_spark.plans.pipeline import run_extraction
 from tika_addons_spark.sources import catalog
 
@@ -223,6 +221,20 @@ def test_missing_checkpoint_is_probed_not_read(spark, tmp_path, monkeypatch):
         catalog.read_checkpoint(spark, "nosuchscheme://bucket/ckpt")
 
 
+def test_read_transcripts_accepts_uris(spark, tmp_path):
+    """The source follows the same path-or-table rule as the target and the
+    checkpoint: a ``file://`` URI of a parquet file without the suffix is a
+    path, not a table name."""
+    from tika_addons_spark.fixtures import write_transcripts_parquet
+
+    src = tmp_path / "transcripts"
+    write_transcripts_parquet(str(src), n_convs=3, seed=5)
+    plain = catalog.read_transcripts(spark, str(src)).collect()
+    assert plain
+    uri = catalog.read_transcripts(spark, src.as_uri()).collect()
+    assert sorted(uri) == sorted(plain)
+
+
 def test_checkpoint_frame_matches_python_rows(spark):
     """checkpoint_frame (Arrow, no Python RDD) yields the same rows and
     schema as createDataFrame over the equivalent Python tuple."""
@@ -237,20 +249,6 @@ def test_checkpoint_frame_matches_python_rows(spark):
     want = spark.createDataFrame([row], CHECKPOINT_SCHEMA)
     assert got.schema == want.schema
     assert got.collect() == want.collect()
-
-
-def test_rollup_and_position(spark, transcripts_df):
-    ext = extract_turns(transcripts_df)
-    roll = conversation_rollup(ext)
-    row = roll.filter(F.col("conv_id") == "conv-00000000").collect()[0]
-    assert row.n_turns == 800  # the whale
-    assert row.n_valid + row.n_rejected <= row.n_turns
-    assert row.chars_in > 0
-
-    pos = with_position(ext).filter(F.col("conv_id") == "conv-00000001")
-    rows = pos.orderBy("turn_idx").select("turn_idx", "position", "is_container").collect()
-    assert [r.position for r in rows] == list(range(len(rows)))
-    assert rows[0].is_container and not rows[1].is_container
 
 
 def test_align_runs_sentinel(spark):

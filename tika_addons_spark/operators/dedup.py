@@ -224,6 +224,17 @@ def _banded(
     )
 
 
+def _small_groups(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """The ``keys`` of ``df`` whose group has at most ``cap`` rows: the
+    hot-bucket guard. Callers semi-join their rows against it."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count("*").alias("_bsz"))
+        .filter(F.col("_bsz") <= cap)
+        .select(*keys)
+    )
+
+
 def minhash_lsh_pairs(
     sigs: DataFrame,
     n_bands: int = 16,
@@ -245,12 +256,7 @@ def minhash_lsh_pairs(
     should own instead of pairwise enumeration."""
     banded = _banded(sigs, n_bands, rows_per_band)
     if max_bucket_size is not None:
-        ok = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count("*").alias("_bsz"))
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .select("band", "bucket")
-        )
+        ok = _small_groups(banded, ["band", "bucket"], max_bucket_size)
         banded = banded.join(ok, ["band", "bucket"], "left_semi")
     left = banded.alias("l")
     right = banded.alias("r")
@@ -295,12 +301,7 @@ def minhash_lsh_estimated_pairs(
     signatures (n_hashes ≥ 512) prefer the two-phase shape."""
     banded = _banded(sigs, n_bands, rows_per_band, carry=("signature",))
     if max_bucket_size is not None:
-        ok = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count("*").alias("_bsz"))
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .select("band", "bucket")
-        )
+        ok = _small_groups(banded, ["band", "bucket"], max_bucket_size)
         banded = banded.join(ok, ["band", "bucket"], "left_semi")
     left, right = banded.alias("l"), banded.alias("r")
     return (
@@ -346,12 +347,7 @@ def minhash_lsh_pairs_incremental(
         b_old.withColumn("is_new", F.lit(False))
     )
     if max_bucket_size is not None:
-        ok = (
-            b_all.groupBy("band", "bucket")
-            .agg(F.count("*").alias("_bsz"))
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .select("band", "bucket")
-        )
+        ok = _small_groups(b_all, ["band", "bucket"], max_bucket_size)
         b_new = b_new.join(ok, ["band", "bucket"], "left_semi")
         b_all = b_all.join(ok, ["band", "bucket"], "left_semi")
     l, r = b_new.alias("l"), b_all.alias("r")
@@ -393,12 +389,7 @@ def minhash_dup_clusters(
         "id", F.concat_ws("#", F.col("band").cast("string"), "bucket").alias("bkey")
     )
     if max_bucket_size is not None:
-        ok = (
-            m.groupBy("bkey")
-            .agg(F.count("*").alias("_bsz"))
-            .filter(F.col("_bsz") <= max_bucket_size)
-            .select("bkey")
-        )
+        ok = _small_groups(m, ["bkey"], max_bucket_size)
         m = m.join(ok, "bkey", "left_semi")
     m = m.persist()
 
@@ -609,12 +600,7 @@ def ngram_jaccard_pairs(
         F.array_distinct(F.array_sort(tokens_col(text_col))).alias("toks"),
     )
     if max_block_size is not None:
-        ok = (
-            toks.groupBy("block")
-            .agg(F.count("*").alias("_bsz"))
-            .filter(F.col("_bsz") <= max_block_size)
-            .select("block")
-        )
+        ok = _small_groups(toks, ["block"], max_block_size)
         toks = toks.join(ok, "block", "left_semi")
     l, r = toks.alias("l"), toks.alias("r")
     inter = F.size(F.array_intersect(F.col("l.toks"), F.col("r.toks")))

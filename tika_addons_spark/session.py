@@ -24,33 +24,11 @@ ARROW_MAX_RECORDS = 4096
 PANDAS_UDF_BUFFER = str(16 * 1024 * 1024)
 
 
-def find_jdbc_driver_jar() -> str | None:
-    """Locate a JDBC driver jar on this machine (none ships inside the
-    Spark distribution). The DuckDB driver (org.duckdb:duckdb_jdbc, a
-    public Maven artifact) appears in the local coursier/ivy caches on
-    some hosts; when present the S6/S10 JDBC seams run END-TO-END against
-    a real database (tests/test_jdbc_roundtrip.py) instead of
-    plan-construction-only. On a real cluster the driver jar is passed
-    with ``spark-submit --jars`` exactly like this."""
-    import glob
-
-    for pattern in (
-        os.path.expanduser("~/.cache/coursier/**/duckdb_jdbc*.jar"),
-        os.path.expanduser("~/.ivy2/**/duckdb_jdbc*.jar"),
-        os.path.expanduser("~/.m2/**/duckdb_jdbc*.jar"),
-    ):
-        hits = sorted(glob.glob(pattern, recursive=True))
-        if hits:
-            return hits[-1]
-    return None
-
-
 def get_spark(
     app_name: str = "tika_addons_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    with_jdbc: bool | None = None,
 ) -> SparkSession:
     """Build a session tuned for the extraction workload.
 
@@ -112,15 +90,6 @@ def get_spark(
         ) * (1024**3)
         if _shm_free >= _min_free:
             builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
-    # JDBC driver jar is attached only on explicit opt-in (with_jdbc=True or
-    # SPARK_GRAFT_JDBC=1): a stale/corrupt cached jar must not silently
-    # change the classpath of sessions that never touch a jdbc: URL.
-    if with_jdbc is None:
-        with_jdbc = os.environ.get("SPARK_GRAFT_JDBC", "") == "1"
-    if with_jdbc:
-        jdbc_jar = find_jdbc_driver_jar()
-        if jdbc_jar:
-            builder = builder.config("spark.jars", jdbc_jar)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

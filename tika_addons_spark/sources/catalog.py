@@ -35,9 +35,9 @@ EXTRACTED_TABLE_SCHEMA = T.StructType(
 
 def read_transcripts(spark: SparkSession, source: str) -> DataFrame:
     """Read the transcripts table. ``source`` is an Iceberg table name
-    (``cat.db.transcripts``) or a parquet path. Schema is declared, never
-    inferred — extra columns are pruned at the scan."""
-    if source.endswith(".parquet") or os.path.isdir(source) or os.path.isfile(source):
+    (``cat.db.transcripts``) or a parquet path or URI. Schema is declared,
+    never inferred — extra columns are pruned at the scan."""
+    if _is_path(source):
         df = spark.read.schema(TRANSCRIPTS_SCHEMA).parquet(source)
     else:
         df = spark.read.table(source)
@@ -142,4 +142,6 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
 
 
 def _is_path(target: str) -> bool:
-    return "/" in target or target.endswith(".parquet")
+    """A path or URI (``/``, ``.parquet``, or an existing local name such as
+    a relative directory); anything else is a catalog table name."""
+    return "/" in target or target.endswith(".parquet") or os.path.exists(target)
