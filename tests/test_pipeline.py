@@ -70,6 +70,27 @@ def test_kill_and_resume_equals_clean_run(spark, transcripts_path, tmp_path):
     assert a.count() == b.count()
 
 
+def test_run_extraction_keeps_session_overwrite_mode(spark, transcripts_path, tmp_path):
+    """The job's dynamic partition overwrite is an option of its own write:
+    the caller's session stays static, and a caller's partitioned
+    overwrite afterwards still replaces every partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    assert before.lower() == "static"
+    run_extraction(
+        spark, transcripts_path, str(tmp_path / "out"), str(tmp_path / "ck"),
+        run_id="r", n_buckets=2,
+    )
+    assert spark.conf.get(key) == before
+
+    t = str(tmp_path / "t")
+    spark.createDataFrame([("a", 1), ("b", 2)], "v string, p int").write.mode(
+        "overwrite").partitionBy("p").parquet(t)
+    spark.createDataFrame([("c", 1)], "v string, p int").write.mode(
+        "overwrite").partitionBy("p").parquet(t)
+    assert [tuple(r) for r in spark.read.parquet(t).collect()] == [("c", 1)]
+
+
 def test_committed_read_isolation(spark, transcripts_path, tmp_path):
     """Readers using the checkpoint-as-manifest see ONLY completed waves."""
     out = str(tmp_path / "iso")

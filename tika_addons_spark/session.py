@@ -23,6 +23,26 @@ ARROW_MAX_RECORDS = 4096
 # ~1.4× extraction throughput at local[32].
 PANDAS_UDF_BUFFER = str(16 * 1024 * 1024)
 
+# Entries in Spark's JVM-wide cache of Janino-compiled classes (default
+# 100). The 60 declared queries at sf0.001 generate ~545 classes; with 100
+# entries a second pass over them recompiled 612, with 1024 entries 14
+# (q33/q50/q54/q58, whose generated source differs between passes). A
+# recompiled class is a new class, so the JIT interprets and compiles it
+# again: on 4 cores the perfbench query_suite pass went 19.9 → 16.6 CPU-s
+# (median of 10 pairs). ~2× the working set, because eviction is
+# least-recently-used per cache segment, not globally. Static and
+# JVM-wide: the first session of a JVM sets it.
+CODEGEN_CACHE_ENTRIES = 1024
+
+
+def _cpus() -> int:
+    """CPUs this process may run on (its affinity mask under a cpuset or
+    ``taskset``), not the host's count."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no sched_getaffinity (macOS, Windows)
+        return os.cpu_count() or 8
+
 
 def get_spark(
     app_name: str = "tika_addons_spark",
@@ -35,7 +55,7 @@ def get_spark(
     AQE on (runtime coalesce + skew-join splitting), Arrow on (pandas UDF hot
     path), UTC timezone pinned so duckdb-oracle comparisons are stable.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _cpus())
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # match parallelism, not the 200 default: at sandbox scale 200
@@ -61,6 +81,7 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
         )
         .config("spark.sql.execution.pandas.udf.buffer.size", PANDAS_UDF_BUFFER)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
         # Floor on scan parallelism, derived from the session's core count

@@ -47,12 +47,17 @@ def read_transcripts(spark: SparkSession, source: str) -> DataFrame:
 def write_extracted(df: DataFrame, target: str, partition_col: str = "bucket") -> None:
     """Write extraction output partitioned by bucket, idempotently:
     dynamic partition overwrite replaces exactly the buckets present in
-    ``df`` (re-running a wave after a crash cannot double-write). With
-    Iceberg this is ``writeTo(target).overwritePartitions()``."""
-    spark = df.sparkSession
+    ``df`` (re-running a wave after a crash cannot double-write). The mode
+    is a write option, which outranks the session conf, so the caller's
+    session keeps its own overwrite mode. With Iceberg this is
+    ``writeTo(target).overwritePartitions()``."""
     if _is_path(target):
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(target)
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(target)
+        )
     else:
         df.writeTo(target).overwritePartitions()
 
