@@ -8,6 +8,9 @@ equivalent is a status='corrupt' row), and detection equivalence.
 
 from __future__ import annotations
 
+import bz2
+import lzma
+
 import pytest
 
 from tika_addons_spark.functions import sniff
@@ -18,8 +21,8 @@ def test_detect_bytes_magics():
     assert ba.detect_bytes(ba.make_zip([("a", b"x")])) == ba.MIME_ZIP
     assert ba.detect_bytes(ba.make_tar([("a", b"x")])) == ba.MIME_TAR
     assert ba.detect_bytes(ba.make_gzip(b"x")) == ba.MIME_GZIP
-    assert ba.detect_bytes(ba.make_bz2(b"x")) == ba.MIME_BZIP2
-    assert ba.detect_bytes(ba.make_xz(b"x")) == ba.MIME_XZ
+    assert ba.detect_bytes(bz2.compress(b"x")) == ba.MIME_BZIP2
+    assert ba.detect_bytes(lzma.compress(b"x")) == ba.MIME_XZ
     assert ba.detect_bytes(b"7z\xbc\xaf\x27\x1c rest") == ba.MIME_7Z
     assert ba.detect_bytes(b"Rar!\x1a\x07\x00 rest") == ba.MIME_RAR
     assert ba.detect_bytes(None) == sniff.MIME_EMPTY
@@ -70,8 +73,8 @@ def test_unpack_nested_gz_tar_zip():
 
 
 def test_unpack_compressed_wrappers_single_child():
-    for pack, _mime in ((ba.make_gzip, ba.MIME_GZIP), (ba.make_bz2, ba.MIME_BZIP2),
-                        (ba.make_xz, ba.MIME_XZ)):
+    for pack, _mime in ((ba.make_gzip, ba.MIME_GZIP), (bz2.compress, ba.MIME_BZIP2),
+                        (lzma.compress, ba.MIME_XZ)):
         rows = ba.unpack_one("w", pack("wrapped text".encode()), max_depth=2)
         assert len(rows) == 1
         assert rows[0]["member_idx"] == 0

@@ -1,25 +1,11 @@
 """Golden-string tests for the MTEXT cleaner — the 5 reference cases
 (DWGReadDev/src/test/java/TestRegexCleaners.java:10-45) verbatim, plus
-normalizer and digest goldens (FIXTURES.md §3)."""
+the F1 newline-collapse golden."""
 
 import pytest
 
 from tika_addons_spark.functions.cleaners import clean_mtext
-from tika_addons_spark.functions.normalize import (
-    clean_for_sink,
-    collapse_newlines,
-    normalize_ws,
-    strip_emails,
-    strip_non_alpha,
-    strip_urls,
-)
-from tika_addons_spark.functions.stats import (
-    count_alpha_codepoints,
-    count_non_ws_codepoints,
-    text_digest,
-    text_profile_digest,
-    token_entropy,
-)
+from tika_addons_spark.functions.normalize import collapse_newlines
 
 GOLDENS = [
     # (input, expected) — TestRegexCleaners.java:10-45
@@ -53,52 +39,3 @@ def test_f1_newline_collapse_exact():
     # TikaEvalDocMapper.java:263-264 — \n+ → \n then trim
     assert collapse_newlines("a\n\n\nb\nc\n") == "a\nb\nc"
     assert collapse_newlines("  \n x \n\n ") == "x"
-
-
-def test_f2_whitespace_normalize():
-    assert normalize_ws(" a\t\tb\n c  ") == "a b c"
-
-
-def test_f3_f4_url_email_strip():
-    # regex semantics from TikaOpenNLPDetector.java:119-120
-    assert strip_urls("see https://example.com/a/b?q=1 now") == "see   now"
-    assert "joe@" not in strip_emails("mail joe@example.com please")
-    # short URLs (<10 chars after scheme) are NOT stripped (regex min length)
-    assert strip_urls("http://a.b x") == "http://a.b x"
-
-
-def test_f5_non_alpha_strip():
-    # trailing run → trailing space (same as the Java replaceAll; the chain's
-    # final ShrinkNormalizer/normalize_ws does the trim)
-    assert strip_non_alpha("ab1c, d2e!") == "ab c d e "
-
-
-def test_f8_sink_clean():
-    assert clean_for_sink("a\x00b\tc\rd\ne") == "ab c d e"
-
-
-def test_digest_semantics_pinned():
-    # TikaEvalDocMapperTest.java:17-56
-    c1 = "the the the quick brown fox JUMPED jumped    over over ---- the quick brown fox"
-    c2 = "the the the quick brown fox jumped jumped over over the quick brown fox"
-    c3 = "the the the the the the the " + c2 + " " + c2
-    assert text_digest(c1) == text_digest(c2)
-    assert text_digest(c2) != text_digest(c3)
-    assert (
-        text_profile_digest(c1)
-        == text_profile_digest(c2)
-        == text_profile_digest(c3)
-    )
-
-
-def test_char_class_counts_astral():
-    # codepoint, not UTF-16-unit, semantics (MultiComparer.java:163-174)
-    s = "ab 𝐀c1!"  # 𝐀 = U+1D400 (astral, alphabetic)
-    assert count_alpha_codepoints(s) == 4
-    assert count_non_ws_codepoints(s) == 6
-
-
-def test_token_entropy():
-    assert token_entropy("") == 0.0
-    assert token_entropy("a a a a") == 0.0
-    assert abs(token_entropy("a b") - 1.0) < 1e-12

@@ -7,7 +7,8 @@ counterpart:
 - simhash candidate generation: recall MUST be 1.0 within the Hamming ball
   (the pigeonhole block scheme is a guarantee, not a heuristic).
 - minhash LSH estimate: |estimated - exact shingle Jaccard| within the
-  binomial error of a 64-hash signature.
+  binomial error of a 64-hash signature, and the fused estimate q31/q51
+  run equals the two-phase spec (candidates, then re-join).
 - q41 (LSH-verified near-dup): recall vs the exact all-pairs token-Jaccard
   baseline, precision exact-by-construction.
 - ANN LSH: recall ≥ 0.9 on clustered vectors (the realistic embedding
@@ -100,6 +101,25 @@ def test_minhash_estimate_error_bound(spark, docs):
     assert errs.mean() <= 0.06
     assert errs.max() <= 0.25
     sigs.unpersist()
+
+
+def test_fused_estimate_equals_two_phase(spark, docs):
+    """minhash_lsh_estimated_pairs carries the signatures through the banded
+    join; it must emit exactly the pairs and estimates of the two-phase
+    spec, minhash_lsh_pairs followed by minhash_jaccard_estimate."""
+    sigs = dedup.minhash_signatures(docs, "doc_id", "text").persist()
+    fused = {
+        (r.id_a, r.id_b): r.est_jaccard
+        for r in dedup.minhash_lsh_estimated_pairs(sigs).collect()
+    }
+    spec = {
+        (r.id_a, r.id_b): r.est_jaccard
+        for r in dedup.minhash_jaccard_estimate(
+            sigs, dedup.minhash_lsh_pairs(sigs)
+        ).collect()
+    }
+    sigs.unpersist()
+    assert len(spec) > 100 and fused == spec
 
 
 def test_q41_verified_neardup_recall_and_precision(spark):
@@ -350,46 +370,3 @@ def test_ivf_train_sample_plan_is_filtered(spark):
         df.repartition(7), "vec_id", "embedding", 64, 64
     ).collect()
     assert a == b and 0 < len(a) <= 64
-
-
-def test_incremental_pairs_never_touch_corpus_corpus(spark):
-    """The daily-increment path: new×old and new×new pairs only — an old
-    near-dup pair inside the corpus must NOT be re-emitted, and every
-    new-involving pair from the full self-join must be recovered."""
-    corpus = spark.createDataFrame(
-        [(1, "aaa bbb ccc ddd words here"), (2, "aaa bbb ccc ddd words here"),
-         (3, "completely different corpus text")],
-        "doc_id long, text string",
-    )
-    new = spark.createDataFrame(
-        [(10, "aaa bbb ccc ddd words here"),   # dup of corpus 1/2
-         (11, "brand new family text"), (12, "brand new family text"),
-         (13, "unique newcomer")],
-        "doc_id long, text string",
-    )
-    cs = dedup.minhash_signatures(corpus, "doc_id", "text", unit="token")
-    ns = dedup.minhash_signatures(new, "doc_id", "text", unit="token")
-
-    got = {
-        (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_pairs_incremental(ns, cs).collect()
-    }
-    # (1,2) is an old×old dup — must be absent
-    assert (1, 2) not in got and (2, 1) not in got
-    assert (10, 1) in got and (10, 2) in got   # new×old, new id first
-    assert (11, 12) in got                      # new×new, ordered
-    assert all(a in (10, 11, 12, 13) for a, _ in got)
-
-    # completeness vs the full self-join, restricted to new-involving pairs
-    full = dedup.minhash_lsh_pairs(cs.unionByName(ns))
-    new_ids = {10, 11, 12, 13}
-    expect = set()
-    for r in full.collect():
-        a, b = r.id_a, r.id_b
-        if a in new_ids or b in new_ids:
-            if a in new_ids:
-                expect.add((a, b) if (b in new_ids and a < b) or b not in new_ids else (a, b))
-            else:
-                expect.add((b, a))
-    norm_got = {(a, b) for a, b in got}
-    assert norm_got == expect, (norm_got, expect)

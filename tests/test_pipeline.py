@@ -203,6 +203,60 @@ def _jobs_started(spark, action) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def test_dedup_totals_are_one_action(spark, transcripts_path, tmp_path, monkeypatch):
+    """Between writing the dedup table and building its checkpoint row, the
+    near-dup stage reads the table back once: one action yields both the
+    turn and the survivor count."""
+    import uuid
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from tika_addons_spark.plans.pipeline import DEDUP_STAGE_KEY, run_dedup_stage
+
+    out, ckpt, dd = (str(tmp_path / n) for n in ("ext", "ck", "dedup"))
+    run_extraction(spark, transcripts_path, out, ckpt, run_id="r1", n_buckets=4)
+
+    sc = spark.sparkContext
+    group = f"dedup-totals-{uuid.uuid4().hex}"
+    marks: dict = {}
+
+    def jobs() -> int:
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    write, frame = DataFrameWriter.parquet, catalog.checkpoint_frame
+
+    def parquet(self, path, *a, **kw):
+        write(self, path, *a, **kw)
+        if path == dd:
+            marks["written"] = jobs()
+
+    def checkpoint_frame(spark_, rows):
+        if rows and rows[0][1] == DEDUP_STAGE_KEY:
+            marks["counted"], marks["row"] = jobs(), rows[0]
+        return frame(spark_, rows)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(catalog, "checkpoint_frame", checkpoint_frame)
+    sc.setJobGroup(group, group)
+    try:
+        st = run_dedup_stage(spark, out, dd, ckpt, "r1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    monkeypatch.undo()
+
+    # as many jobs as one read plus one aggregate action over the table
+    one_action = _jobs_started(
+        spark, lambda: spark.read.parquet(dd).agg(F.count(F.lit(1))).first()
+    )
+    assert marks["counted"] - marks["written"] == one_action
+    labels = spark.read.parquet(dd)
+    n_turns, n_surv = labels.count(), labels.filter("is_survivor").count()
+    assert n_turns > n_surv > 0
+    assert (st["dedup_turns"], st["dedup_clusters"]) == (n_turns, n_surv)
+    assert marks["row"][3] == n_turns
+    assert marks["row"][7] == {"clusters": n_surv, "duplicates": n_turns - n_surv}
+
+
 def test_fresh_checkpoint_starts_no_job(spark, tmp_path):
     """A missing checkpoint reads as an empty frame built in the JVM: learning
     that nothing is done must not run Python tasks (or any job)."""

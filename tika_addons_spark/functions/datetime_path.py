@@ -1,16 +1,10 @@
-"""Date-parse and filename/path scalar functions (SURVEY.md §2.8 F11–F14).
+"""Extension fixing by content detection (SURVEY.md §2.9 X11), run by q46.
 
-Reference semantics:
-- F11 date parse with fallback-now (``ScraperUtils.java:46-56``): formatter
-  parse, ``Instant.now()`` on failure → ``coalesce(to_timestamp, now())``;
-  a pure variant with an explicit fallback is provided for determinism.
-- F12 date regex extraction (``GithubScraper.java:59,156-164``:
-  ``relative-time datetime="(...)"``; ``BugzillaHtmlIssueScraper.java:94-101``:
-  ``Reported:\\s+(...)``).
-- F13 filename/extension functions (``ScraperUtils.java:102-112``,
-  ``Step2ExtensionFixer.java:159-173``): lowercase extension, ``.tar.gz``→
-  ``tgz`` special case, strip ``.json`` suffix.
-- F14 root-dir split of an entry path (``ZipFeatureDumper.java:246-257``).
+Reference: ``bugtracker-crawler/.../Step2ExtensionFixer.java:46-210``.
+
+SURVEY §2.8's date-parse, date-regex, filename and entry-path functions
+(F11–F14) and the P4 extension allow-list run in no job or query; they are
+out of scope (COVERAGE.md §2.2, §2.8).
 """
 
 from __future__ import annotations
@@ -18,55 +12,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def parse_ts_with_fallback(c: Column, fmt: str, fallback: Column | None = None) -> Column:
-    """F11 — parse or fall back (default: current_timestamp, as the
-    reference does; pass an explicit fallback for deterministic pipelines)."""
-    parsed = F.try_to_timestamp(c, F.lit(fmt))
-    return F.coalesce(parsed, fallback if fallback is not None else F.current_timestamp())
-
-
-def extract_datetime_attr(c: Column) -> Column:
-    """F12 — lift ``datetime="..."`` attribute values out of raw HTML."""
-    return F.regexp_extract(c, r'datetime="([^"]+)"', 1)
-
-
-def extract_reported_date(c: Column) -> Column:
-    """F12 — ``Reported: <date>`` harvest."""
-    return F.regexp_extract(c, r"Reported:\s+(\S+(?: [^\n<]*)?)", 1)
-
-
-def file_extension(c: Column) -> Column:
-    """F13 — lowercase extension; ``.tar.gz`` → ``tgz``; none → ''."""
-    lower = F.lower(c)
-    ext = F.regexp_extract(lower, r"\.([a-z0-9]+)$", 1)
-    return F.when(lower.endswith(".tar.gz"), F.lit("tgz")).otherwise(ext)
-
-
-def strip_json_suffix(c: Column) -> Column:
-    """F13 — drop a trailing ``.json`` (extract-name → original name)."""
-    return F.regexp_replace(c, r"\.json$", "")
-
-
-def root_dir(c: Column) -> Column:
-    """F14 — first path segment of an entry name ('' if none)."""
-    return F.when(
-        F.instr(c, "/") > 0, F.split(c, "/").getItem(0)
-    ).otherwise(F.lit(""))
-
-
-def rest_path(colname: str) -> Column:
-    """F14 — everything after the first '/' (SQL-composable by name)."""
-    return F.expr(
-        f"CASE WHEN instr({colname}, '/') > 0 "
-        f"THEN substring({colname}, instr({colname}, '/') + 1) ELSE '' END"
-    )
-
-
-# ---------------------------------------------------------------------------
-# X11 — extension fixing by content detection, with audit columns
-# (reference: bugtracker-crawler/.../Step2ExtensionFixer.java:46-210)
-# ---------------------------------------------------------------------------
 # extensions the reference refuses to change even when detection disagrees
 # (Step2ExtensionFixer.DONT_CHANGE_ORIG_EXT — kept verbatim for parity)
 DONT_CHANGE_ORIG_EXT = frozenset({
@@ -122,11 +67,3 @@ def fix_extension_cols(path_col: Column, detected_col: Column) -> dict[str, Colu
         "new_ext": F.when(keep, orig).otherwise(base),
         "action": F.when(keep, F.lit("keep")).otherwise(F.lit("rename")),
     }
-
-
-def extension_allowed(path_col: Column, allowed: set[str] | list[str]) -> Column:
-    """P4 — extension allow-list predicate (reference idiom: scrapers keep
-    only attachment types they can parse; e.g. GithubScraper's
-    externalExtensions set). Case-insensitive, '.tar.gz' counts as 'tgz'."""
-    allow = F.array(*[F.lit(a.lower().lstrip(".")) for a in sorted(set(allowed))])
-    return F.array_contains(allow, file_extension(path_col))

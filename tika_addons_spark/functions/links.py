@@ -9,7 +9,9 @@ deduplicated via a seen-set.
 
 Spark-first: everything is a column expression — regexp_extract_all +
 array_distinct + higher-order filter — so it rides whole-stage codegen and
-is trivially DuckDB-oracle-able (q43)."""
+is trivially DuckDB-oracle-able (q43). The deny-lists apply in one place,
+``harvest_kept_hrefs``, together with the reference's github.com attribute
+rule, which needs the tag text around each href."""
 
 from __future__ import annotations
 
@@ -51,17 +53,6 @@ def _denied(h: Column) -> Column:
     # github.com hrefs pointing at commits/trees are navigation, not content
     sub = sub | (h.contains("github.com") & (h.contains("/commit/") | h.contains("/tree/")))
     return sub
-
-
-def filter_denied(hrefs: Column) -> Column:
-    """Drop deny-listed hrefs (keeps order).
-
-    NOTE: this href-only variant cannot apply the reference's extra
-    github.com rule (drop github.com links whose ``<a>`` tag has non-blank
-    attrs before or after the href — ``GithubScraper.java:193-197``), which
-    needs the surrounding tag text. Use :func:`harvest_kept_hrefs` for the
-    full decision."""
-    return F.filter(hrefs, lambda h: ~_denied(h))
 
 
 def harvest_kept_hrefs(c: Column | str) -> Column:

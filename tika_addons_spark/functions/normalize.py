@@ -1,22 +1,19 @@
-"""Text normalization cascades (SURVEY.md §2.8 F1–F8).
+"""Text normalization (SURVEY.md §2.8 F1, F17).
 
-Each normalizer is a pure-Python function: the canonical spec, used by the
-standalone oracle and therefore by every kernel row of the extraction engine.
-Where a declarative plan needs a value without entering Python (F17's
-stack-trace facet), the module offers a Spark Column expression (JVM-side,
-whole-stage-codegen'd).
+``collapse_newlines`` (F1) is a pure-Python function: the canonical spec,
+used by the standalone oracle and therefore by every kernel row of the
+extraction engine. Where a declarative plan needs a value without entering
+Python (F17's stack-trace facet), the module offers a Spark Column
+expression (JVM-side, whole-stage-codegen'd).
 
 Reference semantics:
 - F1 newline collapse + trim: ``content.replaceAll("\\n+","\\n").trim()``
   (tika-eval-solrj/.../TikaEvalDocMapper.java:263-264)
-- F2 whitespace normalize: ``replaceAll("\\s+"," ")``
-  (zip-dumper/.../ZipFeatureDumper.java:238-244)
-- F3 URL strip / F4 email strip: regexes from
-  lang-id/.../TikaOpenNLPDetector.java:119-120 (TIKA-2777 variants)
-- F5 non-alpha/ideograph strip: ``[^\\p{IsAlphabetic}\\p{IsIdeographic}]+``
-  (TikaOpenNLPDetector.java:137-150)
-- F8 control-char clean for sinks: \\u0000→'' and [\\t\\r\\n]→' '
-  (batchlite/.../JDBCMetadataWriter.java:111-122, MimeAndDigester.java:345)
+
+The other §2.8 normalizers are not package functions: q18 normalizes
+whitespace and control characters (F2/F8) in SQL, checked against DuckDB;
+the URL, email and non-alphabetic strips (F3–F5) run in no job or query
+and are out of scope (COVERAGE.md §2.8).
 """
 
 from __future__ import annotations
@@ -26,19 +23,9 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# --- regex constants (single source of truth) ------------------------------
 RE_NEWLINES = re.compile(r"\n+")
-RE_WS = re.compile(r"\s+")
-# TikaOpenNLPDetector.java:119 (custom URL regex to avoid pathological hangs)
-RE_URL = re.compile(r"https?://[-_.?&~;+=/#0-9A-Za-z]{10,10000}")
-# TikaOpenNLPDetector.java:120
-RE_EMAIL = re.compile(r"[-_.0-9A-Za-z]{1,100}@[-_0-9A-Za-z]{1,100}[-_.0-9A-Za-z]{1,100}")
-# Python's \w includes digits/underscore; [^\W\d_] == unicode alphabetic.
-RE_NON_ALPHA_RUN = re.compile(r"(?:[^\w]|[\d_])+", re.UNICODE)
-RE_CONTROL = re.compile(r"[\t\r\n]")
 
 
-# --- pure-Python canonical implementations ---------------------------------
 def collapse_newlines(text: str) -> str:
     """F1 — exact TikaEvalDocMapper semantics: \\n+ → \\n, then trim.
 
@@ -51,31 +38,6 @@ def collapse_newlines(text: str) -> str:
     if "\n\n" in text:
         return RE_NEWLINES.sub("\n", text).strip()
     return text.strip()
-
-
-def normalize_ws(text: str) -> str:
-    """F2 — any whitespace run → single space, trimmed."""
-    return RE_WS.sub(" ", text).strip()
-
-
-def strip_urls(text: str) -> str:
-    """F3 — URLs → single space."""
-    return RE_URL.sub(" ", text)
-
-
-def strip_emails(text: str) -> str:
-    """F4 — emails → single space."""
-    return RE_EMAIL.sub(" ", text)
-
-
-def strip_non_alpha(text: str) -> str:
-    """F5 — non-alphabetic runs → single space (ideographs count as alpha)."""
-    return RE_NON_ALPHA_RUN.sub(" ", text)
-
-
-def clean_for_sink(text: str) -> str:
-    """F8 — NUL removed, tab/CR/LF → space (JDBC/TSV sink hygiene)."""
-    return RE_CONTROL.sub(" ", text.replace("\x00", ""))
 
 
 # ---------------------------------------------------------------------------

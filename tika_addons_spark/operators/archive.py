@@ -11,7 +11,9 @@ Reference semantics (``bugtracker-crawler/.../Step3Unpacker.java:50-229``):
   subsequent sweeps; malformed containers never fail the job
   (``Step3Unpacker.processFile`` catches and logs).
 
-Per-entry feature rows mirror ``ZipFeatureDumper.java:142-207`` (X7).
+Per-entry rows (name, content-detected type, depth) are the shape of the
+entry feature dump in ``ZipFeatureDumper.java:142-207`` (X7); q40 rolls
+them up.
 
 REAL binary formats (zip/tar/gzip/bz2/xz bytes) live in the sibling module
 ``binarchive.py`` (q47, and the extraction path's base64 data-URI turns).
@@ -42,7 +44,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions import sniff
 
@@ -94,12 +95,6 @@ def make_archive(name: str, members: list[tuple[str, str]]) -> str:
         parts.append("\n")
     parts.append("%%ArchiveEnd\n")
     return "".join(parts)
-
-
-def make_gzwrap(name: str, payload: str) -> str:
-    """Single-file compressed wrapper (gz/xz archetype)."""
-    payload = payload if isinstance(payload, str) else ""
-    return f"%GZWRAP-1.0 name={name} len={len(payload)}\n{payload}\n"
 
 
 def pack_members(
@@ -269,14 +264,4 @@ def explode_members(
             "member_text string, detected_type string, depth int, "
             "is_container boolean"
         ),
-    )
-
-
-def member_features(members: DataFrame) -> DataFrame:
-    """Per-entry feature dump (X7, ``ZipFeatureDumper.java:142-207``):
-    name, detected type, length, digest — pure column expressions."""
-    return members.select(
-        *[c for c in members.columns if c not in ("member_text",)],
-        F.length("member_text").cast("long").alias("n_chars"),
-        F.sha2("member_text", 256).alias("sha256"),
     )

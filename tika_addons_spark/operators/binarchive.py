@@ -191,14 +191,6 @@ def make_gzip(data: bytes) -> bytes:
     return gzip.compress(data, mtime=0)
 
 
-def make_bz2(data: bytes) -> bytes:
-    return bz2.compress(data)
-
-
-def make_xz(data: bytes) -> bytes:
-    return lzma.compress(data)
-
-
 # ---------------------------------------------------------------------------
 # unpack side
 # ---------------------------------------------------------------------------

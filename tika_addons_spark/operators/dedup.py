@@ -3,7 +3,7 @@
 Five variants, each designed scale-first (the candidate-generation step is
 always a bucket equi-join, never an O(n²) cross join over the corpus):
 
-- exact:       sha256(text) groupBy — one shuffle, map-side combine.
+- exact:       sha256(text) groupBy — one shuffle (q16).
 - minhash_lsh: shingles → minhash signature → bands → bucket self-join
                (optional hot-bucket cap for degenerate buckets).
 - jaccard_verify_pairs: exact Jaccard on LSH candidates only — verified
@@ -55,8 +55,7 @@ def exact_duplicates(
     buffer never holds more than ``max_ids`` entries — not a slice applied
     after an unbounded collect. The rank's window shares the groupBy's
     hash-partitioning on digest, so the plan still has exactly one
-    exchange; the trade is losing map-side partial aggregation, the same
-    shuffle volume :func:`dedup_exact` already pays."""
+    exchange; the trade is losing map-side partial aggregation."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("digest").orderBy("id")
@@ -70,19 +69,6 @@ def exact_duplicates(
             F.collect_list(F.when(F.col("_rn") <= max_ids, F.col("id")))
         ).alias("ids"),
         (F.count("*") > max_ids).alias("ids_truncated"),
-    )
-
-
-def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Survivors only — the classic exact-dedup pass."""
-    w_digest = F.sha2(F.col(text_col), 256)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(w_digest).orderBy(F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )
 
 
@@ -318,48 +304,6 @@ def minhash_lsh_estimated_pairs(
                 "est_jaccard"
             ),
         )
-        .distinct()
-    )
-
-
-def minhash_lsh_pairs_incremental(
-    new_sigs: DataFrame,
-    corpus_sigs: DataFrame,
-    n_bands: int = 16,
-    rows_per_band: int = 4,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """The daily-increment shape: candidate pairs between NEW documents and
-    an EXISTING corpus (plus new×new), never corpus×corpus — on a 100 TB
-    corpus with a 0.1% daily increment that asymmetry is the whole game
-    (re-running the full self-join reshuffles a thousand days of history
-    to dedup one).
-
-    Join keys are the same banded buckets; at production scale the corpus
-    side is a PRECOMPUTED banded table written once at ingest (columns
-    id/band/bucket, bucketed by (band, bucket)), making this a co-located
-    join against yesterday's layout. Output: (id_a=new, id_b=any) pairs,
-    each emitted once — new×old pairs keep the new id in ``id_a``;
-    new×new pairs are ordered ``id_a < id_b``."""
-    b_new = _banded(new_sigs, n_bands, rows_per_band)
-    b_old = _banded(corpus_sigs, n_bands, rows_per_band)
-    b_all = b_new.withColumn("is_new", F.lit(True)).unionByName(
-        b_old.withColumn("is_new", F.lit(False))
-    )
-    if max_bucket_size is not None:
-        ok = _small_groups(b_all, ["band", "bucket"], max_bucket_size)
-        b_new = b_new.join(ok, ["band", "bucket"], "left_semi")
-        b_all = b_all.join(ok, ["band", "bucket"], "left_semi")
-    l, r = b_new.alias("l"), b_all.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") != F.col("r.id"))
-            & (~F.col("r.is_new") | (F.col("l.id") < F.col("r.id"))),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .distinct()
     )
 

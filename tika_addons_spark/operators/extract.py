@@ -118,59 +118,3 @@ def extract_embedded_turns(df: DataFrame) -> DataFrame:
             "chars_out int"
         ),
     )
-
-
-def extract_pages(df: DataFrame) -> DataFrame:
-    """UDTF-shaped operator: one row per *page* of each PDF-ish turn
-    (N rows in → M rows out), the flatten-embedded-docs pattern of the
-    reference (``Step3Unpacker.java:50-229`` numbered children;
-    ``ZipFeatureDumper.java:142-207`` per-entry rows; Renderer page artifacts
-    ``tika-rendering-dev/.../Renderer.java:34-38``)."""
-    import pandas as pd  # noqa: F811 — explicit for the worker closure
-
-    from ..functions import sniff as sniff_mod
-    from ..operators.payload import _join_lines, _mask_spans, scan_xpackets
-
-    def batches(it):
-        import re
-
-        page_re = re.compile(r"^%%Page\s+(\d+)\s*$")
-        for pdf in it:
-            rows = []
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                if not isinstance(text, str):
-                    continue
-                if sniff_mod.sniff_one(text) != sniff_mod.MIME_PDF:
-                    continue
-                masked = _mask_spans(text, scan_xpackets(text))
-                magic = masked.find("%PDF-")
-                eof = masked.find("%%EOF", magic)
-                body = masked[magic : eof if eof >= 0 else len(masked)]
-                cur, pages = None, []
-                for line in body.split("\n")[1:]:
-                    m = page_re.match(line.strip())
-                    if m:
-                        cur = []
-                        pages.append((int(m.group(1)), cur))
-                        continue
-                    if cur is not None:
-                        cur.append(line)
-                for page_no, lines in pages:
-                    rows.append(
-                        {
-                            "conv_id": conv_id,
-                            "turn_idx": int(turn_idx),
-                            "page_no": page_no,
-                            "page_text": _join_lines(lines),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=["conv_id", "turn_idx", "page_no", "page_text"]
-            )
-
-    return df.select("conv_id", "turn_idx", "text").mapInPandas(
-        batches,
-        schema="conv_id string, turn_idx int, page_no int, page_text string",
-    )

@@ -142,9 +142,11 @@ def run_dedup_stage(
     out.write.mode("overwrite").parquet(dedup_target)
     sigs.unpersist()
 
-    written = spark.read.parquet(dedup_target)
-    n_turns = written.count()
-    n_survivors = written.filter("is_survivor").count()
+    # one scan of the committed table for both totals
+    n_turns, n_survivors = spark.read.parquet(dedup_target).agg(
+        F.count(F.lit(1)),
+        F.coalesce(F.sum(F.col("is_survivor").cast("long")), F.lit(0)),
+    ).first()
     finished = dt.datetime.now(dt.timezone.utc)
     ckpt_rows = catalog.checkpoint_frame(
         spark,
