@@ -19,8 +19,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from tika_addons_spark.functions.sniff import sniff_col
 from tika_addons_spark.functions.stats import tokens_col
@@ -47,6 +50,23 @@ def _docs_as_transcripts(docs: DataFrame) -> DataFrame:
         F.lit(None).cast("string").alias("tool"),
         F.lit(None).cast("timestamp").alias("ts"),
     )
+
+
+def _synth_payloads(d: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """(doc_id, payload binary): ``make(doc_id)`` for each row of ``d``, in
+    one narrow mapInArrow stage."""
+    schema = StructType.fromDDL("doc_id long, payload binary")
+    arrow_schema = to_arrow_schema(schema)
+
+    def synth(it):
+        for rb in it:
+            ids = rb.column("doc_id")
+            payloads = [make(i) for i in ids.to_pylist()]
+            yield pa.RecordBatch.from_pydict(
+                {"doc_id": ids, "payload": payloads}, schema=arrow_schema
+            )
+
+    return d.mapInArrow(synth, schema)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -538,7 +558,7 @@ def q31_minhash_lsh(spark, sf_dir):
         spark.sparkContext.defaultParallelism
     )
     # persist: the signature UDF feeds both sides of the banded self-join —
-    # without it the mapInPandas stage re-runs. At cluster scale signatures
+    # without it the mapInArrow stage re-runs. At cluster scale signatures
     # are written once as a narrow parquet column instead.
     sigs = dedup.minhash_signatures(d, "doc_id", "text").persist()
     sigs.count()  # eager: both sides of the self-join hit a warm cache
@@ -639,7 +659,7 @@ def q47_binary_archive_rollup(spark, sf_dir):
     # engine must actually parse its own zip/tar/gzip bytes to match.
     # Reference: Step3Unpacker.java:56-71,102-180 (real formats, numbered
     # children, re-detect), ZipFeatureDumper.java:142-207 (entry features).
-    import pandas as pd
+    from itertools import groupby
 
     from tika_addons_spark.operators import binarchive
 
@@ -662,20 +682,24 @@ def q47_binary_archive_rollup(spark, sf_dir):
         .alias("text"),
     ).withColumn("grp", F.concat_ws("|", "source", "lang"))
 
-    def pack_source(pdf: pd.DataFrame) -> pd.DataFrame:
+    schema = StructType.fromDDL("container_id string, payload binary")
+    arrow_schema = to_arrow_schema(schema)
+
+    def pack_source(table: pa.Table) -> pa.Table:
         # Round-6 stage fusion: the zip-per-(source,lang) and tar-per-source
         # stages shared no parallelism win (20 source groups << cores) but
         # cost an extra Exchange + Python stage; building the lang zips
         # inside the source group produces byte-identical containers — the
-        # per-zip member order is the same mergesort by unique doc_id, and
+        # per-zip member order is the same stable sort by unique doc_id, and
         # the tar member order is the same lexicographic zip_name sort.
-        src = str(pdf["source"].iloc[0])
+        src = str(table.column("source")[0].as_py())
+        table = table.sort_by([("grp", "ascending"), ("doc_id", "ascending")])
+        rows = zip(*(table.column(c).to_pylist() for c in ("grp", "doc_id", "text")))
         zips = []
-        for gid, sub in pdf.groupby("grp", sort=True):
-            sub = sub.sort_values("doc_id", kind="mergesort")
+        for gid, sub in groupby(rows, key=lambda r: r[0]):
             members = [
                 (str(i), (t if isinstance(t, str) else "").encode("utf-8"))
-                for i, t in zip(sub["doc_id"], sub["text"])
+                for _, i, t in sub
             ]
             zips.append((f"in-{gid}", binarchive.make_zip(members)))
         zips.sort(key=lambda kv: kv[0])
@@ -698,16 +722,11 @@ def q47_binary_archive_rollup(spark, sf_dir):
             wrapped = snappyf.compress(tar)
         else:
             wrapped = binarchive.make_gzip(tar)
-        return pd.DataFrame(
-            {
-                "container_id": [f"out-{src}"],
-                "payload": [wrapped],
-            }
+        return pa.table(
+            {"container_id": [f"out-{src}"], "payload": [wrapped]}, schema=arrow_schema
         )
 
-    outer = dec.groupBy("source").applyInPandas(
-        pack_source, "container_id string, payload binary"
-    )
+    outer = dec.groupBy("source").applyInArrow(pack_source, schema)
     members = binarchive.explode_binary_members(
         outer, ["container_id"], "payload", max_depth=4
     )
@@ -735,32 +754,33 @@ def q49_embedded_member_extract(spark, sf_dir):
     # length IS SQL-expressible; q47 covers type re-detection breadth.)
     import base64
 
-    import pandas as pd
-
     from tika_addons_spark.operators import binarchive
     from tika_addons_spark.operators.extract import extract_embedded_turns
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    schema = StructType.fromDDL("conv_id string, turn_idx int, text string")
+    arrow_schema = to_arrow_schema(schema)
 
     def synth(it):
-        for pdf in it:
-            uris = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
+        for rb in it:
+            ids, uris = rb.column(0).to_pylist(), []
+            for i, t in zip(ids, rb.column(1).to_pylist()):
                 t = t if isinstance(t, str) else ""
                 z = binarchive.make_zip(
                     [("a", t.encode("utf-8")),
                      ("b", ('<?xml version="1.0"?>' + t).encode("utf-8"))]
                 )
                 uris.append("data:application/zip;base64," + base64.b64encode(z).decode())
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "conv_id": "doc-" + pdf["doc_id"].astype(str),
-                    "turn_idx": 0,
+                    "conv_id": [f"doc-{i}" for i in ids],
+                    "turn_idx": [0] * len(ids),
                     "text": uris,
-                }
+                },
+                schema=arrow_schema,
             )
 
-    turns = d.mapInPandas(synth, "conv_id string, turn_idx int, text string")
+    turns = d.mapInArrow(synth, schema)
     members = extract_embedded_turns(turns)
     return (
         members.groupBy(F.col("detected_type").alias("member_type"))
@@ -787,19 +807,18 @@ def q56_decoded_pixel_sum(spark, sf_dir):
     # A wrong unfilter, LZW table, palette lookup, MCU raster order,
     # chroma upsample, restart re-alignment, interlace scatter, or
     # progressive successive-approximation step breaks the hash match.
-    import pandas as pd
-
     from tika_addons_spark.operators import multimodal
 
     d = _t(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
     )
+    schema = StructType.fromDDL("doc_id long, fmt string, red_sum long")
+    arrow_schema = to_arrow_schema(schema)
 
     def decode_sum(it):
-        for pdf in it:
+        for rb in it:
             sums, fmts = [], []
-            for i in pdf["doc_id"]:
-                i = int(i)
+            for i in rb.column(0).to_pylist():
                 w, h = 16 + i % 32, 8 + i % 16
                 if i % 3 == 0:
                     # alternate Adam7-interlaced layout; lossless, so the
@@ -834,11 +853,12 @@ def q56_decoded_pixel_sum(spark, sf_dir):
                         fmts.append("jpg420")
                     px = multimodal.decode_jpeg(payload)
                 sums.append(int(px[:, :, 0].astype("int64").sum()))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "fmt": fmts, "red_sum": sums}
+            yield pa.RecordBatch.from_pydict(
+                {"doc_id": rb.column(0), "fmt": fmts, "red_sum": sums},
+                schema=arrow_schema,
             )
 
-    per_doc = d.mapInPandas(decode_sum, "doc_id long, fmt string, red_sum long")
+    per_doc = d.mapInArrow(decode_sum, schema)
     return (
         per_doc.groupBy("fmt")
         .agg(
@@ -859,8 +879,6 @@ def q57_bomb_taxonomy(spark, sf_dir):
     # histogram from doc_id arithmetic; any cap regression (reading the
     # oversized member, unbounded decompress, wrong taxonomy) changes the
     # counts and breaks the hash match.
-    import pandas as pd
-
     from tika_addons_spark.operators import binarchive
 
     d = _t(spark, sf_dir, "documents").select("doc_id").repartition(
@@ -868,25 +886,18 @@ def q57_bomb_taxonomy(spark, sf_dir):
     )
     CAP = 4096
 
-    def synth(it):
-        for pdf in it:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                k = i % 4
-                if k == 0:
-                    p = binarchive.make_zip([("a", b"small one"), ("b", b"small two")])
-                elif k == 1:
-                    p = binarchive.make_zip([("big", b"B" * (CAP + 1))])
-                elif k == 2:
-                    p = binarchive.make_gzip(b"\x00" * (CAP * 8))
-                else:
-                    good = binarchive.make_zip([("x", b"payload body")])
-                    p = good[: len(good) // 2]  # truncated mid-archive
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def make(i: int) -> bytes:
+        k = i % 4
+        if k == 0:
+            return binarchive.make_zip([("a", b"small one"), ("b", b"small two")])
+        if k == 1:
+            return binarchive.make_zip([("big", b"B" * (CAP + 1))])
+        if k == 2:
+            return binarchive.make_gzip(b"\x00" * (CAP * 8))
+        good = binarchive.make_zip([("x", b"payload body")])
+        return good[: len(good) // 2]  # truncated mid-archive
 
-    media = d.mapInPandas(synth, "doc_id long, payload binary")
+    media = _synth_payloads(d, make)
     members = binarchive.explode_binary_members(
         media, ["doc_id"], "payload", max_member_bytes=CAP
     )
@@ -964,7 +975,7 @@ def q60_langid_planted(spark, sf_dir):
     # 64 seeds self-detect at 300 chars — pinned in tests). DuckDB
     # predicts the per-language doc counts from doc_id arithmetic without
     # running any model; the hit counter makes a single regressed
-    # language break the hash. Runs the REAL mapInPandas probing path
+    # language break the hash. Runs the REAL mapInArrow probing path
     # (chunked probes, early stop) end-to-end.
     from tika_addons_spark.functions import langid as _lg
 
@@ -1099,32 +1110,22 @@ def q52_sevenz_rollup(spark, sf_dir):
     # recurse through the zip, and content-re-detect each leaf. Member
     # texts are closed-form in doc_id, so DuckDB predicts counts and byte
     # totals without touching container bytes (the q47 trick for 7z).
-    import pandas as pd
-
     from tika_addons_spark.operators import binarchive, sevenz
 
     # documents.parquet is a single row group at every sf, so the scan is one
-    # partition — spread rows first or the synth+parse mapInPandas stage runs
+    # partition — spread rows first or the synth+parse mapInArrow stage runs
     # on 1 of N cores (same hazard/remedy as q56/q57/q59; result is a
     # partitioning-invariant groupBy).
     d = _t(spark, sf_dir, "documents").select("doc_id").repartition(
         spark.sparkContext.defaultParallelism
     )
 
-    def synth(it):
-        for pdf in it:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                plain = b"x" * (i % 7 + 1)
-                xml = f'<?xml version="1.0"?>{i}'.encode()
-                inner_zip = binarchive.make_zip([("n.xml", xml)])
-                payloads.append(
-                    sevenz.make_7z([("t.txt", plain), ("in.zip", inner_zip)])
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def make(i: int) -> bytes:
+        plain = b"x" * (i % 7 + 1)
+        inner_zip = binarchive.make_zip([("n.xml", f'<?xml version="1.0"?>{i}'.encode())])
+        return sevenz.make_7z([("t.txt", plain), ("in.zip", inner_zip)])
 
-    media = d.mapInPandas(synth, "doc_id long, payload binary")
+    media = _synth_payloads(d, make)
     members = binarchive.explode_binary_members(
         media, ["doc_id"], "payload", max_depth=3
     )
@@ -1446,41 +1447,29 @@ def q34_media_features(spark, sf_dir):
     # output is a closed-form function of doc_id, so DuckDB can predict
     # it without parsing — the engine must actually parse its own bytes
     # correctly to match.
-    import pandas as pd
-
     d = _t(spark, sf_dir, "documents").select("doc_id")
 
-    def synth(it):
-        for pdf in it:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                k = i % 7
-                if k == 0:
-                    p = multimodal.make_png(16 + i % 32, 8 + i % 16)
-                elif k == 1:
-                    p = multimodal.make_gif(10 + i % 20, 5 + i % 10)
-                elif k == 2:
-                    p = multimodal.make_jpeg(32 + i % 64, 16 + i % 32)
-                elif k == 3:
-                    p = multimodal.make_wav(100 + (i % 50) * 10)
-                elif k == 4:
-                    p = multimodal.make_mp4(
-                        500 + (i % 40) * 25, 64 + i % 128, 48 + i % 96
-                    )
-                elif k == 5:
-                    p = multimodal.make_bmp(12 + i % 48, 6 + i % 24)
-                else:
-                    p = multimodal.make_tiff(
-                        8 + i % 56, 4 + i % 28,
-                        big_endian=(i // 7) % 2 == 0,
-                        rows_per_strip=(None if i % 2 else 4),
-                    )
-                payloads.append(p)
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
+    def make(i: int) -> bytes:
+        k = i % 7
+        if k == 0:
+            return multimodal.make_png(16 + i % 32, 8 + i % 16)
+        if k == 1:
+            return multimodal.make_gif(10 + i % 20, 5 + i % 10)
+        if k == 2:
+            return multimodal.make_jpeg(32 + i % 64, 16 + i % 32)
+        if k == 3:
+            return multimodal.make_wav(100 + (i % 50) * 10)
+        if k == 4:
+            return multimodal.make_mp4(500 + (i % 40) * 25, 64 + i % 128, 48 + i % 96)
+        if k == 5:
+            return multimodal.make_bmp(12 + i % 48, 6 + i % 24)
+        return multimodal.make_tiff(
+            8 + i % 56, 4 + i % 28,
+            big_endian=(i // 7) % 2 == 0,
+            rows_per_strip=(None if i % 2 else 4),
+        )
 
-    media = d.mapInPandas(synth, "media_id long, payload binary")
-    heads = multimodal.parse_media_headers(media)
+    heads = multimodal.parse_media_headers(_synth_payloads(d, make), id_col="doc_id")
     return heads.select(
         F.col("id").alias("media_id"),
         "media_type",

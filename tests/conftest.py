@@ -15,7 +15,7 @@ def spark():
 @pytest.fixture(scope="session")
 def transcripts_pdf():
     # sf-smoke: ~50 convs incl. the whale (~1200 turns)
-    return generate_transcripts(n_convs=30, seed=42)
+    return generate_transcripts(n_convs=30, seed=42).to_pandas()
 
 
 @pytest.fixture(scope="session")

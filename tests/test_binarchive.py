@@ -230,12 +230,12 @@ def test_explode_binary_members_spark(spark):
 
 
 def test_explode_binary_members_plan_is_narrow(spark):
-    """One MapInPandas, no shuffle — the X10 scale contract."""
+    """One MapInArrow, no shuffle — the X10 scale contract."""
     import pandas as pd
 
     df = spark.createDataFrame(
         pd.DataFrame({"container_id": ["c"], "payload": [ba.make_gzip(b"x")]})
     )
     plan = ba.explode_binary_members(df, ["container_id"], "payload")._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert "Exchange" not in plan

@@ -56,6 +56,13 @@ def _values_equal(a, b) -> bool:
     return a == b
 
 
+def _assert_no_pandas_udf(name: str, df) -> None:
+    """Every UDF takes and returns Arrow: no ``*InPandas`` node (MapInPandas,
+    FlatMapGroupsInPandas, ...) in the query's executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert "InPandas" not in plan, f"{name}: pandas UDF in plan\n{plan}"
+
+
 ORACLED = sorted(entry_mod.oracle_sql().keys())
 ROWS_ONLY = sorted(set(entry_mod.queries()) - set(ORACLED))
 
@@ -63,7 +70,9 @@ ROWS_ONLY = sorted(set(entry_mod.queries()) - set(ORACLED))
 @pytest.mark.parametrize("name", ORACLED)
 def test_query_matches_oracle(spark, duck, name):
     q = entry_mod.queries()[name]
-    actual = _normalize(q(spark, SF_DIR).toPandas())
+    df = q(spark, SF_DIR)
+    actual = _normalize(df.toPandas())
+    _assert_no_pandas_udf(name, df)
     expected = _normalize(duck.sql(entry_mod.oracle_sql()[name]).df())
 
     assert list(actual.columns) == list(expected.columns), (
@@ -131,7 +140,9 @@ def _row_digest(pdf: pd.DataFrame) -> str:
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only_golden_digest(spark, name):
-    pdf = entry_mod.queries()[name](spark, SF_DIR).toPandas()
+    df = entry_mod.queries()[name](spark, SF_DIR)
+    pdf = df.toPandas()
+    _assert_no_pandas_udf(name, df)
     digest = _row_digest(pdf)
     if os.environ.get("SPARK_GRAFT_REPIN"):
         data = {}

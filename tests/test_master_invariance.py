@@ -4,12 +4,18 @@ compared by a content digest over the full sorted output."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
+# This checkout, not a fixed path: the worker and Spark's Python workers
+# (which put their working directory first on sys.path) must import the
+# engine under test.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 WORKER = r"""
 import sys, hashlib
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from tika_addons_spark.session import get_spark
 from tika_addons_spark.operators.extract import extract_turns
 from tika_addons_spark.plans.pipeline import salted_repartition
@@ -30,9 +36,13 @@ print("DIGEST", h, len(out))
 
 
 def _digest(master: str, src: str) -> tuple[str, str]:
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, env.get("PYTHONPATH")) if p
+    )
     out = subprocess.run(
-        [sys.executable, "-c", WORKER, master, src],
-        capture_output=True, text=True, timeout=300,
+        [sys.executable, "-c", WORKER, master, src, REPO],
+        capture_output=True, text=True, timeout=300, env=env, cwd=REPO,
     )
     for line in out.stdout.splitlines():
         if line.startswith("DIGEST"):

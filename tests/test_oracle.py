@@ -2,6 +2,7 @@
 exactness, poison totality (X5 — failures recorded, never raised)."""
 
 import numpy as np
+import pyarrow.compute as pc
 import pytest
 
 from tika_addons_spark.fixtures import (
@@ -123,8 +124,8 @@ def test_truncation_path():
 
 
 def test_whole_corpus_total_function():
-    pdf = generate_transcripts(n_convs=25, seed=7)
-    for t in pdf["text"]:
+    table = generate_transcripts(n_convs=25, seed=7)
+    for t in table.column("text").to_pylist():
         r = extract_one(t)
         assert r["parse_status"] in {"valid", "valid-warnings", "rejected"}
         assert r["chars_out"] == len(r["extracted_text"])
@@ -142,5 +143,5 @@ def test_generator_determinism():
     b = generate_transcripts(n_convs=10, seed=42)
     assert a.equals(b)
     # whale conversation present (skew fixture)
-    counts = a.groupby("conv_id").size()
-    assert counts.max() == 800
+    counts = pc.value_counts(a.column("conv_id")).field("counts")
+    assert pc.max(counts).as_py() == 800

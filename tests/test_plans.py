@@ -11,6 +11,20 @@ import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.01"
 
+# Every Python exec node Spark 4.1 plans, as plan-string substrings: row and
+# scalar Arrow UDFs (and their UDTFs), grouped/window aggregates, maps,
+# grouped and cogrouped maps (pandas and Arrow), stateful streaming.
+PYTHON_NODES = (
+    "BatchEvalPython", "ArrowEvalPython", "ArrowAggregatePython",
+    "ArrowWindowPython", "MapInPandas", "MapInArrow", "FlatMapGroupsIn",
+    "FlatMapCoGroupsIn", "TransformWithState",
+)
+
+
+def assert_no_python(p: str) -> None:
+    found = [n for n in PYTHON_NODES if n in p]
+    assert not found, (found, p)
+
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
@@ -60,7 +74,7 @@ def test_whole_stage_codegen_for_column_ops(spark):
     p = plan_of(df)
     # '*(n)' prefixes mark whole-stage-codegen subtrees in the plan string
     assert "*(1)" in p or "WholeStageCodegen" in p, p
-    assert "BatchEvalPython" not in p, "no row-at-a-time Python in column ops"
+    assert_no_python(p)
 
 
 def test_extraction_single_python_stage(spark, transcripts_df):
@@ -108,7 +122,7 @@ def test_dup_clusters_linear_plan(spark):
 
 
 def test_archive_explode_single_python_stage(spark):
-    """q40's unpack is ONE mapInPandas stage over the packed containers —
+    """q40's unpack is ONE mapInArrow stage over the packed containers —
     no shuffle between pack output and member explode."""
     from tika_addons_spark.operators import archive
 
@@ -117,52 +131,44 @@ def test_archive_explode_single_python_stage(spark):
         "container_id string, payload string",
     )
     p = plan_of(archive.explode_members(df, ["container_id"], "payload"))
-    assert p.count("MapInPandas") == 1, p
+    assert p.count("MapInArrow") == 1, p
     assert "Exchange" not in p, "explode must not shuffle"
 
 
 def test_link_harvest_stays_jvm_side(spark):
     """q43 is pure column expressions: zero Python operators in the plan."""
     df = entry.q43_link_harvest(spark, SF)
-    p = plan_of(df)
-    assert "BatchEvalPython" not in p, p
-    assert "MapInPandas" not in p, p
-    assert "ArrowEvalPython" not in p, p
+    assert_no_python(plan_of(df))
 
 
 def test_extension_fix_stays_jvm_side(spark):
     df = entry.q46_extension_fix_audit(spark, SF)
-    p = plan_of(df)
-    assert "BatchEvalPython" not in p, p
-    assert "MapInPandas" not in p, p
+    assert_no_python(plan_of(df))
 
 
 def test_lang_grid_stays_jvm_side(spark):
     """q48's detector grid (synthesis, stopword voting, accuracy agg) is
     pure column expressions — zero Python operators."""
-    p = plan_of(entry.q48_lang_grid(spark, SF))
-    assert "BatchEvalPython" not in p, p
-    assert "MapInPandas" not in p, p
-    assert "ArrowEvalPython" not in p, p
+    assert_no_python(plan_of(entry.q48_lang_grid(spark, SF)))
 
 
 def test_binary_archive_rollup_plan(spark):
     """q47: packing is ONE grouped-map python op (round-6 fused the
     zip-per-(source,lang) and tar-per-source stages — byte-identical
-    containers, one fewer Exchange), the unpack is ONE mapInPandas, and
+    containers, one fewer Exchange), the unpack is ONE mapInArrow, and
     nothing in the plan is a cartesian product."""
     p = plan_of(entry.q47_binary_archive_rollup(spark, SF))
-    assert p.count("FlatMapGroupsInPandas") == 1, p  # fused source pack
-    assert p.count("MapInPandas") == 1, p            # the binary explode
+    assert p.count("FlatMapGroupsInArrow") == 1, p  # fused source pack
+    assert p.count("MapInArrow") == 1, p            # the binary explode
     assert "CartesianProduct" not in p, p
 
 
 def test_embedded_member_extract_plan(spark):
-    """q49: synth + member-extract are two narrow mapInPandas stages with no
+    """q49: synth + member-extract are two narrow mapInArrow stages with no
     shuffle between them (the only Exchange feeds the final rollup)."""
     p = plan_of(entry.q49_embedded_member_extract(spark, SF))
-    assert p.count("MapInPandas") == 2, p
-    pre_agg = p.split("MapInPandas")[1]  # between the two python stages
+    assert p.count("MapInArrow") == 2, p
+    pre_agg = p.split("MapInArrow")[1]  # between the two python stages
     assert "Exchange" not in pre_agg, p
 
 
@@ -197,11 +203,11 @@ def test_ann_planted_plan_not_cartesian(spark):
 
 
 def test_sevenz_rollup_single_python_explode(spark):
-    """q52: synth + 7z member explode are two narrow mapInPandas stages;
+    """q52: synth + 7z member explode are two narrow mapInArrow stages;
     the only Exchange feeds the final rollup."""
     p = plan_of(entry.q52_sevenz_rollup(spark, SF))
-    assert p.count("MapInPandas") == 2, p
-    pre_agg = p.split("MapInPandas")[1]
+    assert p.count("MapInArrow") == 2, p
+    pre_agg = p.split("MapInArrow")[1]
     assert "Exchange" not in pre_agg, p
 
 
@@ -224,8 +230,7 @@ def test_q59_extract_planted_single_python_stage(spark):
     df = entry.q59_extract_planted(spark, SF)
     p = plan_of(df)
     assert "CartesianProduct" not in p, p
-    n_python = p.count("MapInArrow") + p.count("MapInPandas")
-    assert n_python == 1, p
+    assert p.count("MapInArrow") == 1, p
     # repartition + orderBy range exchange only
     assert p.count("Exchange") <= 2, p
 
@@ -233,9 +238,9 @@ def test_q59_extract_planted_single_python_stage(spark):
 def test_q60_langid_planted_single_python_stage(spark):
     """q60 (trigram detector planted oracle): seed-prefix synthesis is an
     element_at over a literal array (JVM-side); detection is ONE
-    mapInPandas stage; the per-language rollup is a partial-agg shuffle."""
+    mapInArrow stage; the per-language rollup is a partial-agg shuffle."""
     df = entry.q60_langid_planted(spark, SF)
     p = plan_of(df)
     assert "CartesianProduct" not in p, p
-    assert p.count("MapInPandas") + p.count("MapInArrow") == 1, p
+    assert p.count("MapInArrow") == 1, p
     assert "partial" in p.lower(), p  # map-side combine before the shuffle

@@ -24,7 +24,7 @@ from __future__ import annotations
 import datetime as dt
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 WORDS = (
     "the quick brown fox jumps over lazy dog spark engine extracts clean "
@@ -278,56 +278,45 @@ def conversation_rows(c: int, seed: int = 42, whale: bool = True) -> list[dict]:
 
 def generate_transcripts(
     n_convs: int = 50, seed: int = 42, whale: bool = True
-) -> pd.DataFrame:
-    """Deterministic transcripts table as a pandas DataFrame."""
+) -> pa.Table:
+    """Deterministic transcripts table as an Arrow table."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .schema import TRANSCRIPTS_SCHEMA  # local: importing fixtures needs no pyspark
+
     rows = []
     for c in range(n_convs):
         rows.extend(conversation_rows(c, seed=seed, whale=whale))
-    pdf = pd.DataFrame(rows)
-    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
-    return pdf
+    return pa.Table.from_pylist(rows, schema=to_arrow_schema(TRANSCRIPTS_SCHEMA))
 
 
 def generate_transcripts_spark(spark, n_convs: int, seed: int = 42, whale: bool = True):
     """Distributed deterministic generation (same rows as
     ``generate_transcripts``, any partitioning) — used to build bench-scale
     inputs in parallel."""
-    from .schema import TRANSCRIPTS_SCHEMA  # local import: avoid cycle
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .schema import TRANSCRIPTS_SCHEMA  # local: importing fixtures needs no pyspark
+
+    schema = to_arrow_schema(TRANSCRIPTS_SCHEMA)
 
     def gen(batches):
-        for pdf in batches:
+        for rb in batches:
             rows = []
-            for c in pdf["id"]:
-                rows.extend(conversation_rows(int(c), seed=seed, whale=whale))
-            out = pd.DataFrame(
-                rows,
-                columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
-            )
-            out["turn_idx"] = out["turn_idx"].astype("int32")
-            yield out
+            for c in rb.column(0).to_pylist():
+                rows.extend(conversation_rows(c, seed=seed, whale=whale))
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
     n_parts = spark.sparkContext.defaultParallelism * 2
     return (
         spark.range(0, n_convs, numPartitions=n_parts)
-        .mapInPandas(gen, schema=TRANSCRIPTS_SCHEMA)
+        .mapInArrow(gen, schema=TRANSCRIPTS_SCHEMA)
     )
 
 
 def write_transcripts_parquet(path: str, n_convs: int = 50, seed: int = 42) -> str:
     """Write the generated table as a single parquet file; returns path."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pdf = generate_transcripts(n_convs=n_convs, seed=seed)
-    schema = pa.schema(
-        [
-            ("conv_id", pa.string()),
-            ("turn_idx", pa.int32()),
-            ("role", pa.string()),
-            ("text", pa.string()),
-            ("tool", pa.string()),
-            ("ts", pa.timestamp("us", tz="UTC")),
-        ]
-    )
-    pq.write_table(pa.Table.from_pandas(pdf, schema=schema, preserve_index=False), path)
+    pq.write_table(generate_transcripts(n_convs=n_convs, seed=seed), path)
     return path

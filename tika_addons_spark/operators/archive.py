@@ -42,8 +42,10 @@ from __future__ import annotations
 import re
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..functions import sniff
 
@@ -108,31 +110,36 @@ def pack_members(
     members ordered by ``name_col`` for determinism. Returns
     (container_id string, payload string).
 
-    applyInPandas grouped-map: each group is one output row; the shuffle is
+    applyInArrow grouped-map: each group is one output row; the shuffle is
     the unavoidable group-by-container co-location and the payload build is
     linear in member bytes."""
+    schema = StructType.fromDDL(
+        "container_id string, group_value string, payload string"
+    )
+    arrow_schema = to_arrow_schema(schema)
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(name_col, kind="mergesort")
-        gid = str(pdf[group_col].iloc[0])
+    def build(table: pa.Table) -> pa.Table:
+        table = table.sort_by(name_col)  # stable, like a mergesort
+        gid = str(table.column(group_col)[0].as_py())
         members = [
             (str(n), t if isinstance(t, str) else "")
-            for n, t in zip(pdf[name_col], pdf[text_col])
+            for n, t in zip(
+                table.column(name_col).to_pylist(), table.column(text_col).to_pylist()
+            )
         ]
-        return pd.DataFrame(
+        return pa.table(
             {
                 "container_id": [f"{container_prefix}-{gid}"],
                 "group_value": [gid],
                 "payload": [make_archive(f"{container_prefix}-{gid}", members)],
-            }
+            },
+            schema=arrow_schema,
         )
 
     return (
         df.select(group_col, name_col, text_col)
         .groupBy(group_col)
-        .applyInPandas(
-            build, schema="container_id string, group_value string, payload string"
-        )
+        .applyInArrow(build, schema=schema)
     )
 
 
@@ -228,40 +235,31 @@ def explode_members(
     max_depth: int = 3,
     emit_containers: bool = False,
 ) -> DataFrame:
-    """X10 as a Spark operator: mapInPandas UDTF — N container rows in,
+    """X10 as a Spark operator: mapInArrow UDTF — N container rows in,
     M member rows out. One narrow-dependency stage, no shuffle; at 100 TB
     the only distribution concern is container-size skew, which the caller
     handles with the same salted repartition the extraction pipeline uses."""
     id_cols = id_cols or ["container_id"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out_cols = id_cols + [
-            "member_idx",
-            "member_name",
-            "member_text",
-            "detected_type",
-            "depth",
-            "is_container",
-        ]
-        for pdf in it:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in it:
             rows = []
-            for tup in pdf[id_cols + [text_col]].itertuples(index=False):
+            for tup in zip(*(c.to_pylist() for c in rb.columns)):
                 ids, text = tup[:-1], tup[-1]
                 root = str(ids[0])
                 for r in explode_one(
                     root, text, max_depth=max_depth, emit_containers=emit_containers
                 ):
                     rows.append(dict(zip(id_cols, ids)) | r)
-            yield pd.DataFrame(rows, columns=out_cols)
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     id_schema = ", ".join(
         f"{c} {df.schema[c].dataType.simpleString()}" for c in id_cols
     )
-    return df.select(*id_cols, text_col).mapInPandas(
-        batches,
-        schema=(
-            f"{id_schema}, member_idx int, member_name string, "
-            "member_text string, detected_type string, depth int, "
-            "is_container boolean"
-        ),
+    schema = StructType.fromDDL(
+        f"{id_schema}, member_idx int, member_name string, "
+        "member_text string, detected_type string, depth int, "
+        "is_container boolean"
     )
+    arrow_schema = to_arrow_schema(schema)
+    return df.select(*id_cols, text_col).mapInArrow(batches, schema=schema)

@@ -49,7 +49,7 @@ decompressed volume across the nested expansion, ``too-large``).
 Per-entry feature rows mirror ``ZipFeatureDumper.java:142-207`` (X7):
 name, detected type, byte length, sha256 over the raw bytes.
 
-Spark shape: :func:`explode_binary_members` is a mapInPandas UDTF — N
+Spark shape: :func:`explode_binary_members` is a mapInArrow UDTF — N
 container rows in, M member rows out, one narrow stage, no shuffle. At
 100 TB the only distribution concern is container-size skew, handled by the
 same salted repartition the extraction pipeline uses. The sibling module
@@ -69,8 +69,10 @@ import zipfile
 import zlib
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..functions import sniff
 from . import lz4f, lzc, rar5, sevenz, snappyf
@@ -471,10 +473,6 @@ def _row(idx, name, text, data, mtype, depth, is_container, n_bytes, status):
     }
 
 
-_MEMBER_COLS = [
-    "member_idx", "member_name", "member_text", "member_bytes",
-    "detected_type", "depth", "is_container", "n_bytes", "sha256", "status",
-]
 _MEMBER_SCHEMA = (
     "member_idx int, member_name string, member_text string, "
     "member_bytes binary, detected_type string, depth int, "
@@ -492,7 +490,7 @@ def explode_binary_members(
     max_member_bytes: int = DEFAULT_MAX_MEMBER_BYTES,
     max_total_bytes: int = DEFAULT_MAX_TOTAL_BYTES,
 ) -> DataFrame:
-    """X10 over real bytes as a Spark operator: mapInPandas UDTF — N
+    """X10 over real bytes as a Spark operator: mapInArrow UDTF — N
     container rows in, M member rows out (incl. per-entry X7 features:
     n_bytes, sha256 over raw bytes). One narrow stage, no shuffle; corrupt
     and unsupported containers become status rows, never task failures.
@@ -500,14 +498,12 @@ def explode_binary_members(
     exposed so callers can size them to executor memory."""
     id_cols = id_cols or ["container_id"]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out_cols = id_cols + _MEMBER_COLS
-        for pdf in it:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in it:
             rows = []
-            for tup in pdf[id_cols + [bytes_col]].itertuples(index=False):
+            for tup in zip(*(c.to_pylist() for c in rb.columns)):
                 ids, data = tup[:-1], tup[-1]
                 root = str(ids[0])
-                data = bytes(data) if data is not None else None
                 for r in unpack_one(
                     root, data, max_depth=max_depth,
                     emit_containers=emit_containers,
@@ -516,11 +512,11 @@ def explode_binary_members(
                     max_total_bytes=max_total_bytes,
                 ):
                     rows.append(dict(zip(id_cols, ids)) | r)
-            yield pd.DataFrame(rows, columns=out_cols)
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     id_schema = ", ".join(
         f"{c} {df.schema[c].dataType.simpleString()}" for c in id_cols
     )
-    return df.select(*id_cols, bytes_col).mapInPandas(
-        batches, schema=f"{id_schema}, {_MEMBER_SCHEMA}"
-    )
+    schema = StructType.fromDDL(f"{id_schema}, {_MEMBER_SCHEMA}")
+    arrow_schema = to_arrow_schema(schema)
+    return df.select(*id_cols, bytes_col).mapInArrow(batches, schema=schema)

@@ -22,7 +22,7 @@ The reference's only dedup is Set-based exact key dedup
 grouping (``MultiComparer.java:135-148``, J3) — these generalize it to the
 near-dup family a 100 TB corpus needs.
 
-MinHash/simhash signatures are computed in a vectorized pandas UDF (numpy
+MinHash/simhash signatures are computed in a vectorized Arrow UDF (numpy
 matrix ops per batch, no per-row Python); candidate joins and Jaccard
 verification are pure DataFrame ops so Catalyst/AQE handle distribution.
 """
@@ -30,10 +30,11 @@ verification are pure DataFrame ops so Catalyst/AQE handle distribution.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions.stats import tokens_col
 
@@ -91,11 +92,14 @@ def _minhash_params(n_hashes: int, seed: int = 42) -> tuple[np.ndarray, np.ndarr
 
 
 def _hash_strings(strings: list[str] | np.ndarray) -> np.ndarray:
-    """Deterministic vectorized 64-bit string hashing (pd.util.hash_array —
+    """Deterministic vectorized 64-bit string hashing (pandas' hash_array —
     siphash with a fixed key, stable across processes/runs)."""
+    # pandas only here, imported late: q32's golden and q53's oracle pin its bits
+    from pandas.util import hash_array
+
     if len(strings) == 0:
         return np.array([], dtype=np.uint64)
-    return pd.util.hash_array(np.asarray(strings, dtype=object))
+    return hash_array(np.asarray(strings, dtype=object))
 
 
 import re as _re
@@ -149,7 +153,7 @@ def minhash_signatures(
     seed: int = 42,
     unit: str = "char",
 ) -> DataFrame:
-    """(id, signature array<long>) via a vectorized pandas UDF.
+    """(id, signature array<long>) via a vectorized mapInArrow UDF.
 
     ``unit`` picks the similarity space (see :func:`_shingle_hashes`): use
     ``"token"`` when downstream verification is token-set Jaccard."""
@@ -157,9 +161,9 @@ def minhash_signatures(
 
     def batch(it):
         p = np.uint64(_MERSENNE)
-        for pdf in it:
+        for rb in it:
             sigs = []
-            for t in pdf[text_col]:
+            for t in rb.column(1).to_pylist():
                 t = t if isinstance(t, str) else ""
                 sh = _shingle_hashes(t.lower(), shingle_k, unit)  # uint64
                 if len(sh) == 0:
@@ -170,7 +174,10 @@ def minhash_signatures(
                 x = sh % p
                 vals = (a[:, None] * x[None, :] + b[:, None]) % p
                 sigs.append(vals.min(axis=1).astype(np.int64).tolist())
-            yield pd.DataFrame({"id": pdf[id_col], "signature": sigs})
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), pa.array(sigs, arrow_schema.field(1).type)],
+                schema=arrow_schema,
+            )
 
     schema = T.StructType(
         [
@@ -178,7 +185,8 @@ def minhash_signatures(
             T.StructField("signature", T.ArrayType(T.LongType()), False),
         ]
     )
-    return df.select(id_col, text_col).mapInPandas(batch, schema=schema)
+    arrow_schema = to_arrow_schema(schema)
+    return df.select(id_col, text_col).mapInArrow(batch, schema=schema)
 
 
 def _banded(
@@ -392,16 +400,16 @@ def simhash_signatures(
     df: DataFrame, id_col: str, text_col: str, bits: int = 64
 ) -> DataFrame:
     """64-bit simhash: per-token FNV hash, sign-vote per bit — vectorized
-    numpy inside a pandas UDF."""
+    numpy inside a mapInArrow UDF."""
 
     def batch(it):
         import re as _re
 
         tok = _re.compile(r"[^\W\d_]+", _re.UNICODE)
         powers = np.uint64(1) << np.arange(bits, dtype=np.uint64)
-        for pdf in it:
+        for rb in it:
             out = []
-            for t in pdf[text_col]:
+            for t in rb.column(1).to_pylist():
                 t = t if isinstance(t, str) else ""
                 toks = tok.findall(t.lower())
                 if not toks:
@@ -415,7 +423,9 @@ def simhash_signatures(
                 # long (int(np.int64(x)) raises OverflowError on numpy>=2
                 # when bit 63 is set)
                 out.append(sig - (1 << 64) if sig >= (1 << 63) else sig)
-            yield pd.DataFrame({"id": pdf[id_col], "simhash": out})
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(0), pa.array(out, pa.int64())], schema=arrow_schema
+            )
 
     schema = T.StructType(
         [
@@ -423,7 +433,8 @@ def simhash_signatures(
             T.StructField("simhash", T.LongType(), False),
         ]
     )
-    return df.select(id_col, text_col).mapInPandas(batch, schema=schema)
+    arrow_schema = to_arrow_schema(schema)
+    return df.select(id_col, text_col).mapInArrow(batch, schema=schema)
 
 
 def simhash_near_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:

@@ -29,8 +29,10 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..functions import sniff
 from ..schema import EXTRACTED_SCHEMA
@@ -59,16 +61,10 @@ def extract_embedded_turns(df: DataFrame) -> DataFrame:
     from ..oracle import extract_one as _extract_one
     from . import binarchive
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "conv_id", "turn_idx", "member_idx", "member_name",
-            "detected_type", "status", "extracted_text", "chars_out",
-        ]
-        for pdf in it:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in it:
             rows = []
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
+            for conv_id, turn_idx, text in zip(*(c.to_pylist() for c in rb.columns)):
                 if not isinstance(text, str):
                     continue
                 ctype = sniff.sniff_one(text)
@@ -96,25 +92,16 @@ def extract_embedded_turns(df: DataFrame) -> DataFrame:
                         etext, chars = sub["extracted_text"], sub["chars_out"]
                     else:
                         etext, chars = None, 0
-                    rows.append(
-                        {
-                            "conv_id": conv_id,
-                            "turn_idx": int(turn_idx),
-                            "member_idx": r["member_idx"],
-                            "member_name": r["member_name"],
-                            "detected_type": r["detected_type"],
-                            "status": r["status"],
-                            "extracted_text": etext,
-                            "chars_out": chars,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+                    # the output schema keeps r's member_idx, member_name,
+                    # detected_type and status, and drops its other keys
+                    rows.append({"conv_id": conv_id, "turn_idx": turn_idx,
+                                 "extracted_text": etext, "chars_out": chars} | r)
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
-    return df.select("conv_id", "turn_idx", "text").mapInPandas(
-        batches,
-        schema=(
-            "conv_id string, turn_idx int, member_idx int, member_name string, "
-            "detected_type string, status string, extracted_text string, "
-            "chars_out int"
-        ),
+    schema = StructType.fromDDL(
+        "conv_id string, turn_idx int, member_idx int, member_name string, "
+        "detected_type string, status string, extracted_text string, "
+        "chars_out int"
     )
+    arrow_schema = to_arrow_schema(schema)
+    return df.select("conv_id", "turn_idx", "text").mapInArrow(batches, schema=schema)

@@ -22,9 +22,10 @@ a total function: malformed payloads and out-of-envelope formats
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # magic-prefix detection table (longest prefixes first so e.g. \xff\xd8\xff
 # wins over any shorter overlap).
@@ -177,19 +178,12 @@ def parse_media_headers(
     duration_ms) — the real kernel behind the decode seam."""
 
     def batch(it):
-        for pdf in it:
+        for rb in it:
             rows = [
-                parse_media_header(
-                    p if isinstance(p, (bytes, bytearray)) else None
-                )
-                for p in pdf[bin_col]
+                {"id": i} | parse_media_header(p)
+                for i, p in zip(rb.column(0).to_pylist(), rb.column(1).to_pylist())
             ]
-            out = pd.DataFrame(rows)
-            out.insert(0, "id", pdf[id_col].values)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            out["duration_ms"] = out["duration_ms"].astype("Int64")
-            yield out
+            yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
 
     schema = T.StructType(
         [
@@ -200,7 +194,8 @@ def parse_media_headers(
             T.StructField("duration_ms", T.LongType(), True),
         ]
     )
-    return df.select(id_col, bin_col).mapInPandas(batch, schema=schema)
+    arrow_schema = to_arrow_schema(schema)
+    return df.select(id_col, bin_col).mapInArrow(batch, schema=schema)
 
 
 # --- deterministic synthesizers (fixtures/tests; real public byte layouts) --

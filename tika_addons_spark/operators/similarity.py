@@ -7,8 +7,8 @@ Two paths, per the task brief:
   a small set broadcast against the corpus: one scan, no n² shuffle.
 - LSH-bucketed ANN (random hyperplane signatures) — the scale path. Each
   vector gets a b-bit signature from seeded random hyperplanes (vectorized
-  numpy in a pandas UDF); candidates meet via multi-probe bucket equi-join,
-  exact cosine re-ranks inside buckets only.
+  numpy over each Arrow batch); candidates meet via multi-probe bucket
+  equi-join, exact cosine re-ranks inside buckets only.
 
 At 100 TB the broadcast side is the query batch and signatures are a narrow
 persisted column; the bucket join shuffles only collisions.
@@ -17,10 +17,11 @@ persisted column; the bucket join shuffles only collisions.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def _dot(a, b):
@@ -75,6 +76,14 @@ def cosine_topk_bruteforce(
     )
 
 
+def _matrix(vecs: pa.ListArray, dim: int) -> np.ndarray:
+    """(rows, dim) float64 matrix of a fixed-dimension list column: one
+    reshape of its values. ``flatten`` honours the offsets of a sliced
+    array, ``.values`` does not."""
+    flat = vecs.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(vecs), dim)
+
+
 def hyperplane_signatures(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -97,23 +106,19 @@ def hyperplane_signatures(
     powers = 1 << np.arange(n_bits, dtype=np.int64)
 
     def batch(it):
-        for pdf in it:
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            ids, tables, sigs = [], [], []
-            for t in range(n_tables):
-                sig_bits = (mat @ planes[t]) > 0
-                sig = (sig_bits * powers).sum(axis=1).astype(np.int64)
-                ids.append(pdf[id_col].to_numpy())
-                tables.append(np.full(len(pdf), t, dtype=np.int32))
-                sigs.append(sig)
-            yield pd.DataFrame(
-                {
-                    "id": np.concatenate(ids),
-                    "table": np.concatenate(tables),
-                    "lsh_sig": np.concatenate(sigs),
-                }
+        for rb in it:
+            mat = _matrix(rb.column(1), dim)
+            sigs = [
+                (((mat @ planes[t]) > 0) * powers).sum(axis=1).astype(np.int64)
+                for t in range(n_tables)
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.concat_arrays([rb.column(0)] * n_tables),
+                    pa.array(np.arange(n_tables, dtype=np.int32).repeat(len(mat))),
+                    pa.array(np.concatenate(sigs)),
+                ],
+                schema=arrow_schema,
             )
 
     schema = T.StructType(
@@ -123,7 +128,8 @@ def hyperplane_signatures(
             T.StructField("lsh_sig", T.LongType(), False),
         ]
     )
-    return df.select(id_col, vec_col).mapInPandas(batch, schema=schema)
+    arrow_schema = to_arrow_schema(schema)
+    return df.select(id_col, vec_col).mapInArrow(batch, schema=schema)
 
 
 def cosine_topk_lsh(
@@ -271,18 +277,17 @@ def _ivf_assign(
     C = centroids
 
     def batch(it):
-        for pdf in it:
-            mat = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+        for rb in it:
+            mat = _matrix(rb.column(1), C.shape[1])
             mat /= np.linalg.norm(mat, axis=1, keepdims=True) + 1e-12
             p = min(n_probe, C.shape[0])
             top = np.argsort(-(mat @ C.T), kind="stable", axis=1)[:, :p]
-            yield pd.DataFrame(
-                {
-                    out_id: np.repeat(pdf[id_col].to_numpy(), p),
-                    "centroid": top.reshape(-1).astype(np.int32),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column(0).take(np.arange(len(mat)).repeat(p)),
+                    pa.array(top.reshape(-1).astype(np.int32)),
+                ],
+                schema=arrow_schema,
             )
 
     schema = T.StructType(
@@ -291,7 +296,8 @@ def _ivf_assign(
             T.StructField("centroid", T.IntegerType(), False),
         ]
     )
-    return df.select(id_col, vec_col).mapInPandas(batch, schema=schema)
+    arrow_schema = to_arrow_schema(schema)
+    return df.select(id_col, vec_col).mapInArrow(batch, schema=schema)
 
 
 def cosine_topk_ivf(

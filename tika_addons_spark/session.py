@@ -13,11 +13,12 @@ from pyspark.sql import SparkSession
 
 # Arrow batch size: extraction turns can be large strings; keep batches
 # bounded so a batch of giant poison turns doesn't balloon executor memory,
-# but big enough to amortize per-batch pandas/Arrow overhead.
+# but big enough to amortize per-batch Arrow overhead.
 ARROW_MAX_RECORDS = 4096
 
-# JVM→Python socket buffer for pandas UDFs: the 64 KiB default is smaller
-# than one Arrow batch, which serializes each task into a strict
+# JVM→Python socket buffer of every Arrow-batched Python UDF (mapInArrow and
+# applyInArrow too, despite the setting's pandas name): the 64 KiB default is
+# smaller than one Arrow batch, which serializes each task into a strict
 # produce/consume ping-pong (python workers idle while the JVM prepares the
 # next batch). 16 MiB lets batches queue so both sides stay busy — measured
 # ~1.4× extraction throughput at local[32].
@@ -52,8 +53,9 @@ def get_spark(
 ) -> SparkSession:
     """Build a session tuned for the extraction workload.
 
-    AQE on (runtime coalesce + skew-join splitting), Arrow on (pandas UDF hot
-    path), UTC timezone pinned so duckdb-oracle comparisons are stable.
+    AQE on (runtime coalesce + skew-join splitting), Arrow on (toPandas and
+    createDataFrame transfers), UTC timezone pinned so duckdb-oracle
+    comparisons are stable.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _cpus())
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -87,7 +89,7 @@ def get_spark(
         # Floor on scan parallelism, derived from the session's core count
         # (never a constant): single-file parquet inputs land on 1-2 scan
         # tasks otherwise, serializing the scan-stage work (partial
-        # aggregation, mapInPandas synth) onto one core. Splits are still
+        # aggregation, mapInArrow synth) onto one core. Splits are still
         # bounded below by row-group layout, so this is a no-op for
         # many-file cluster-scale tables.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
