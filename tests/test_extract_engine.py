@@ -141,10 +141,13 @@ def test_invariance_arrow_batch_size(spark, transcripts_df):
         .select(*GATE_COLS)
         .toPandas()
     )
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    records = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    nbytes = "spark.sql.execution.arrow.maxBytesPerBatch"
+    old = {k: spark.conf.get(k) for k in (records, nbytes)}
     try:
-        for n in ("16", "10000"):
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", n)
+        # 64 KiB puts each whale turn in a batch of its own
+        for key, n in ((records, "16"), (records, "10000"), (nbytes, "65536")):
+            spark.conf.set(key, n)
             alt = (
                 extract_turns(transcripts_df)
                 .orderBy("conv_id", "turn_idx")
@@ -153,7 +156,37 @@ def test_invariance_arrow_batch_size(spark, transcripts_df):
             )
             pd.testing.assert_frame_equal(base, alt)
     finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_arrow_batches_close_at_the_byte_bound(spark):
+    """48 whale turns of 150 KB (7.2 MB) in one partition reach a Python
+    UDF in several batches, none over ``ARROW_MAX_BYTES`` by more than its
+    largest row. Held to ``ARROW_MAX_RECORDS`` rows alone they arrive as
+    one batch of the whole partition."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from tika_addons_spark.session import ARROW_MAX_BYTES
+
+    def probe(batches):
+        for rb in batches:
+            row_max = max(rb.slice(i, 1).nbytes for i in range(rb.num_rows))
+            yield pa.RecordBatch.from_pydict(
+                {"rows": [rb.num_rows], "nbytes": [rb.nbytes], "row_max": [row_max]}
+            )
+
+    whales = spark.range(0, 48, 1, numPartitions=1).select(
+        "id", F.repeat(F.lit("w"), 150_000).alias("text")
+    )
+    got = whales.mapInArrow(
+        probe, "rows long, nbytes long, row_max long"
+    ).collect()
+    assert sum(r.rows for r in got) == 48
+    assert len(got) >= 2
+    largest_row = max(r.row_max for r in got)
+    assert all(r.nbytes <= ARROW_MAX_BYTES + largest_row for r in got), got
 
 
 def test_poison_rows_do_not_fail_job(spark):

@@ -70,6 +70,21 @@ def test_kill_and_resume_equals_clean_run(spark, transcripts_path, tmp_path):
     assert a.count() == b.count()
 
 
+def test_second_run_compiles_no_class(spark, transcripts_path, tmp_path):
+    """The checkpoint rows are built on the driver, so a run's timestamps
+    never become literals in generated code: a second run into fresh paths
+    compiles nothing (as literals, they cost one class per wave)."""
+    from test_session_codegen import _compiled_classes
+
+    for i in range(2):
+        c0 = _compiled_classes(spark)
+        run_extraction(
+            spark, transcripts_path, str(tmp_path / f"out{i}"),
+            str(tmp_path / f"ckpt{i}"), run_id="r", n_buckets=4, n_waves=2,
+        )
+    assert _compiled_classes(spark) - c0 == 0
+
+
 def test_run_extraction_keeps_session_overwrite_mode(spark, transcripts_path, tmp_path):
     """The job's dynamic partition overwrite is an option of its own write:
     the caller's session stays static, and a caller's partitioned

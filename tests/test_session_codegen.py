@@ -3,6 +3,8 @@
 - Spark's cache of generated classes holds the declared queries' working
   set, so a second pass over the benchmark's suite compiles nothing.
 - The default ``local[N]`` follows the CPUs the process may run on.
+- The default driver heap is at most half the host's RAM, and
+  ``SPARK_DRIVER_MEM`` overrides it.
 - Every ``spark.sql.*`` key ``get_spark`` sets is one Spark knows, and the
   built session carries the value it was given: Spark accepts any key
   without complaint, so a misspelt key would be a silent no-op.
@@ -158,3 +160,20 @@ def test_session_sql_keys_are_registered_and_applied(spark, monkeypatch):
                              shuffle_partitions=4) is spark
     assert keys <= rec.conf.keys()
     assert {k: spark.conf.get(k) for k in keys} == {k: rec.conf[k] for k in keys}
+
+
+def test_default_driver_memory_fits_the_host(spark, monkeypatch):
+    """A 32g default heap on a 16 GB host let the test JVM grow until the
+    kernel's OOM killer took it."""
+    rec = _RecordingBuilder(spark)
+    monkeypatch.setattr(SparkSession, "builder", rec)
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    session.get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    value = rec.conf["spark.driver.memory"]
+    units = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    assert 0 < int(value[:-1]) * units[value[-1].lower()] <= ram // 2
+
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    session.get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    assert rec.conf["spark.driver.memory"] == "3g"

@@ -237,10 +237,11 @@ def run_extraction(
 
         # per-bucket lineage from the just-committed wave: ONE columnar
         # re-read (small metric columns only — no second extraction pass),
-        # aggregated at (bucket, content_type) grain first so the SAME pass
-        # yields both the scalar stats (sums of the partials) and the exact
-        # content-type histogram. Previously this was two full reads of the
-        # wave output plus a join.
+        # aggregated at (bucket, content_type) grain. That is at most
+        # buckets × 12 MIME types rows, so the driver rolls them up per
+        # bucket and builds the checkpoint rows itself: the wave's
+        # timestamps never reach generated code, which as literals in a
+        # plan made every wave compile a new class.
         per_type = (
             catalog.read_extracted(spark, target)
             .filter(F.col("bucket").isin(wave_buckets))
@@ -253,34 +254,21 @@ def run_extraction(
                     (F.col("parse_status") == STATUS_REJECTED).cast("long")
                 ).alias("n_parse_failures"),
             )
+            .collect()
         )
-        stats = per_type.groupBy("bucket").agg(
-            F.sum("n_turns").alias("n_turns"),
-            F.sum("chars_in").alias("chars_in"),
-            F.sum("chars_out").alias("chars_out"),
-            F.sum("n_parse_failures").alias("n_parse_failures"),
-            F.map_from_entries(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct("detected_content_type", F.col("n_turns"))
-                    )
-                )
-            ).alias("content_types"),
-        )
+        stats: dict[int, list] = {}
+        for bucket, content_type, *sums in sorted(per_type):
+            acc = stats.setdefault(bucket, [0, 0, 0, 0, {}])
+            for i, n in enumerate(sums):
+                acc[i] += n
+            acc[4][content_type] = sums[0]
         finished = dt.datetime.now(dt.timezone.utc)
-        ckpt_rows = (
-            stats.select(
-                F.lit(run_id).alias("run_id"),
-                F.concat(F.lit("bucket="), F.col("bucket")).alias("partition_key"),
-                F.lit("completed").alias("status"),
-                "n_turns",
-                "chars_in",
-                "chars_out",
-                "n_parse_failures",
-                "content_types",
-                F.lit(started).alias("started_ts"),
-                F.lit(finished).alias("finished_ts"),
-            )
+        ckpt_rows = catalog.checkpoint_frame(
+            spark,
+            [
+                (run_id, f"bucket={b}", "completed", *acc, started, finished)
+                for b, acc in stats.items()
+            ],
         )
         catalog.append_checkpoint(ckpt_rows, ckpt)
         n_done += len(wave_buckets)

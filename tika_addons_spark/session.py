@@ -11,9 +11,17 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Arrow batch size: extraction turns can be large strings; keep batches
-# bounded so a batch of giant poison turns doesn't balloon executor memory,
-# but big enough to amortize per-batch Arrow overhead.
+# Arrow batches into every Python UDF (mapInArrow, applyInArrow) close at
+# whichever cap they reach first. The byte cap bounds a worker's memory: turn
+# sizes vary widely (plain_big turns run past 65,536 code points), so batches
+# held to a row count alone differ widely in bytes. A batch goes over the
+# byte cap by at most one row. Chosen on 4 cores from perfbench job_mixed,
+# five interleaved triples (medians; row cap alone → 1 MiB → 256 KiB):
+# worker_rss_mb 697 → 619 → 604, pass_cpu_s 6.90 → 6.72 → 7.73. Only
+# 256 KiB moved pass_cpu_s out of the row-cap runs' quartiles (6.53–7.14).
+ARROW_MAX_BYTES = 1024 * 1024
+
+# The row cap only amortizes per-batch cost over batches of small turns.
 ARROW_MAX_RECORDS = 4096
 
 # JVM→Python socket buffer of every Arrow-batched Python UDF (mapInArrow and
@@ -21,7 +29,7 @@ ARROW_MAX_RECORDS = 4096
 # smaller than one Arrow batch, which serializes each task into a strict
 # produce/consume ping-pong (python workers idle while the JVM prepares the
 # next batch). 16 MiB lets batches queue so both sides stay busy — measured
-# ~1.4× extraction throughput at local[32].
+# ~1.4× extraction throughput at local[32] only; not re-measured on 4 cores.
 PANDAS_UDF_BUFFER = str(16 * 1024 * 1024)
 
 # Entries in Spark's JVM-wide cache of Janino-compiled classes (default
@@ -43,6 +51,17 @@ def _cpus() -> int:
         return len(os.sched_getaffinity(0))
     except AttributeError:  # no sched_getaffinity (macOS, Windows)
         return os.cpu_count() or 8
+
+
+def _default_driver_memory() -> str:
+    """Half the host's physical RAM, at most 32g. A heap as large as the
+    host lets G1 grow the local-mode JVM (driver and executors in one
+    process) until the kernel's OOM killer takes it."""
+    try:
+        ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):  # no sysconf (Windows)
+        return "32g"
+    return f"{min(ram // 2, 32 * 1024**3) // 1024**2}m"
 
 
 def get_spark(
@@ -82,10 +101,14 @@ def get_spark(
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
         )
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES))
         .config("spark.sql.execution.pandas.udf.buffer.size", PANDAS_UDF_BUFFER)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()),
+        )
         # Floor on scan parallelism, derived from the session's core count
         # (never a constant): single-file parquet inputs land on 1-2 scan
         # tasks otherwise, serializing the scan-stage work (partial
@@ -97,8 +120,9 @@ def get_spark(
     # Shuffle/spill on RAM-backed storage when available: local-mode shuffle
     # goes through spark.local.dir, and disk /tmp was measured to both slow
     # and destabilize the repartition stage (29k→82k turns/s swings; tmpfs
-    # gives a stable ~1.5× on the extraction job at local[32]). On a real
-    # cluster this is the NVMe/ramdisk shuffle-dir best practice. Guard:
+    # gives a stable ~1.5× on the extraction job at local[32] only; not
+    # re-measured on 4 cores). On a real cluster this is the NVMe/ramdisk
+    # shuffle-dir best practice. Guard:
     # only when the tmpfs has real headroom — shuffle spill competing with
     # executor memory in a nearly-full /dev/shm must degrade to disk, not
     # OOM the host (SPARK_GRAFT_SHM_MIN_FREE_GB overrides, default 8 GiB).
