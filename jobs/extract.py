@@ -2,7 +2,7 @@
 
 Mirrors the reference's config lifecycle (``batchlite/.../ConfigSrc.java``:
 srcRoot/targRoot/writer/numThreads as args) in Spark terms: source table,
-target table, checkpoint table, run id, bucket/wave/parallelism knobs.
+target path, checkpoint path, run id, bucket/wave/parallelism knobs.
 """
 
 from __future__ import annotations
@@ -23,9 +23,9 @@ from tika_addons_spark.session import get_spark  # noqa: E402
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description="transcript extraction job")
-    p.add_argument("--source", required=True, help="transcripts table/path")
-    p.add_argument("--target", required=True, help="extracted table/path")
-    p.add_argument("--checkpoint", required=True, help="checkpoint table/path")
+    p.add_argument("--source", required=True, help="transcripts table name or path")
+    p.add_argument("--target", required=True, help="extracted output path or URI")
+    p.add_argument("--checkpoint", required=True, help="checkpoint path or URI")
     p.add_argument("--run-id", required=True)
     p.add_argument("--n-buckets", type=int, default=32)
     p.add_argument("--n-waves", type=int, default=1)
@@ -33,7 +33,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--dedup-target",
         default=None,
-        help="optional near-dup stage output table/path (runs after all "
+        help="optional near-dup stage output path or URI (runs after all "
         "waves commit; resumable via its own checkpoint key)",
     )
     p.add_argument("--master", default=None)

@@ -1,14 +1,74 @@
 """End-to-end job tests: checkpointed run, kill-and-resume equivalence
-(FIXTURES.md §4), comparison harness."""
+(FIXTURES.md §4), comparison harness.
+
+A crash is simulated at a seam of the wave's commit protocol: a
+``catalog`` call that raises on its k-th call. ``write_extracted`` raising
+is a crash before a wave's write; ``append_checkpoint`` raising is a crash
+after the write committed and before its checkpoint row exists."""
 
 from __future__ import annotations
+
+import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from tika_addons_spark.operators.compare import align_runs, equality_gate, sim_sets
-from tika_addons_spark.plans.pipeline import run_extraction
+from tika_addons_spark.plans.pipeline import DEDUP_STAGE_KEY, run_extraction
 from tika_addons_spark.sources import catalog
+
+
+class Crash(Exception):
+    """A simulated driver crash."""
+
+
+def _crashed_run(monkeypatch, name: str, k: int, *args, **kw) -> None:
+    """``run_extraction(*args, **kw)`` with ``catalog.<name>`` raising
+    ``Crash`` on its k-th call; the calls before it run for real."""
+    real, calls = getattr(catalog, name), []
+
+    def crashing(*a, **kw_):
+        calls.append(a)
+        if len(calls) == k:
+            raise Crash(f"{name} call {k}")
+        return real(*a, **kw_)
+
+    with monkeypatch.context() as m:
+        m.setattr(catalog, name, crashing)
+        with pytest.raises(Crash):
+            run_extraction(*args, **kw)
+
+
+def _digest(df) -> str:
+    """Order-independent content digest of every column of ``df``."""
+    rows = sorted(r[0] for r in df.select(F.to_json(F.struct("*"))).collect())
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
+def _buckets(df) -> set[int]:
+    return {r.bucket for r in df.select("bucket").distinct().collect()}
+
+
+def _parquet_files(path: str) -> int:
+    return sum(f.endswith(".parquet") for _d, _s, fs in os.walk(path) for f in fs)
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, transcripts_path, tmp_path_factory):
+    """One uncrashed 8-bucket run with the near-dup stage, shared by the
+    crash tests: its output paths and the digests of both outputs."""
+    base = tmp_path_factory.mktemp("clean")
+    out, ckpt, dd = (str(base / n) for n in ("out", "ckpt", "dedup"))
+    run_extraction(
+        spark, transcripts_path, out, ckpt, run_id="clean", n_buckets=8,
+        dedup_target=dd,
+    )
+    return {
+        "out": out,
+        "digest": _digest(catalog.read_extracted(spark, out)),
+        "dedup_digest": _digest(spark.read.parquet(dd)),
+    }
 
 
 def test_run_and_checkpoint(spark, transcripts_path, tmp_path):
@@ -31,6 +91,10 @@ def test_run_and_checkpoint(spark, transcripts_path, tmp_path):
     assert ck.count() == 8
     agg = ck.agg(F.sum("n_turns"), F.sum("chars_in")).collect()[0]
     assert agg[0] == n_in
+    # the returned totals are the sums of the checkpoint rows
+    sums = ck.agg(*(F.sum(c).alias(c) for c in
+                    ("n_turns", "chars_in", "chars_out", "n_parse_failures"))).first()
+    assert {k: stats[k] for k in sums.asDict()} == sums.asDict()
     # lineage sums must equal recomputed sums from the data
     assert agg[1] == df.agg(F.sum("chars_in")).collect()[0][0]
     # content_types histogram covers every turn
@@ -40,34 +104,60 @@ def test_run_and_checkpoint(spark, transcripts_path, tmp_path):
     assert total_ct == n_in
 
 
-def test_kill_and_resume_equals_clean_run(spark, transcripts_path, tmp_path):
-    out_a = str(tmp_path / "a")
-    ckpt_a = str(tmp_path / "cka")
-    # clean single run
-    run_extraction(spark, transcripts_path, out_a, ckpt_a, run_id="rA", n_buckets=8)
+def test_kill_and_resume_equals_clean_run(
+    spark, transcripts_path, tmp_path, clean_run, monkeypatch
+):
+    """A crash before wave 3's write, and one after wave 3's write but
+    before its checkpoint append: each resume with the same run_id redoes
+    exactly the buckets without a checkpoint row, and the output equals the
+    clean run's."""
+    for seam in ("write_extracted", "append_checkpoint"):
+        out_b = str(tmp_path / seam / "b")
+        ckpt_b = str(tmp_path / seam / "ckb")
+        # killed run: 2 of 4 waves committed, then resume with same run_id
+        _crashed_run(
+            monkeypatch, seam, 3, spark, transcripts_path, out_b, ckpt_b,
+            run_id="rB", n_buckets=8, n_waves=4,
+        )
+        done_before = catalog.completed_keys(spark, ckpt_b, "rB").count()
+        assert done_before == 4
+        # wave 3's buckets are on disk only when the crash came after its write
+        assert len(_buckets(catalog.read_extracted(spark, out_b))) == (
+            6 if seam == "append_checkpoint" else 4
+        )
 
-    # killed run: 2 of 4 waves committed, then resume with same run_id
-    out_b = str(tmp_path / "b")
-    ckpt_b = str(tmp_path / "ckb")
-    st = run_extraction(
-        spark, transcripts_path, out_b, ckpt_b,
-        run_id="rB", n_buckets=8, n_waves=4, fail_after_waves=2,
-    )
-    assert st["killed"] and st["completed_buckets"] == 4
-    done_before = catalog.completed_keys(spark, ckpt_b, "rB").count()
-    assert done_before == 4
+        st2 = run_extraction(
+            spark, transcripts_path, out_b, ckpt_b, run_id="rB", n_buckets=8,
+            n_waves=4,
+        )
+        # resume processed ONLY the missing buckets
+        assert st2["completed_buckets"] == 4
 
-    st2 = run_extraction(
-        spark, transcripts_path, out_b, ckpt_b, run_id="rB", n_buckets=8, n_waves=4
-    )
-    # resume processed ONLY the missing buckets
-    assert st2["completed_buckets"] == 4
+        a = catalog.read_extracted(spark, clean_run["out"])
+        b = catalog.read_extracted(spark, out_b)
+        cols = ["extracted_text", "parse_status", "detected_content_type", "chars_out"]
+        assert equality_gate(b, a, cols).count() == 0
+        assert a.count() == b.count()
+        assert _digest(b) == clean_run["digest"], seam
 
-    a = catalog.read_extracted(spark, out_a)
-    b = catalog.read_extracted(spark, out_b)
-    cols = ["extracted_text", "parse_status", "detected_content_type", "chars_out"]
-    assert equality_gate(b, a, cols).count() == 0
-    assert a.count() == b.count()
+
+def test_finished_run_with_empty_buckets_resumes_to_nothing(
+    spark, transcripts_path, tmp_path
+):
+    """With more buckets than conversations, many buckets get no source
+    row. Each still gets one checkpoint row, so calling a finished run again
+    redoes nothing and appends no checkpoint file."""
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    st = run_extraction(spark, transcripts_path, out, ckpt, run_id="e", n_buckets=64)
+    assert st["completed_buckets"] == 64
+    assert len(_buckets(catalog.read_extracted(spark, out))) < 64
+    keys = [r.partition_key for r in catalog.read_checkpoint(spark, ckpt).collect()]
+    assert sorted(keys) == sorted(f"bucket={b}" for b in range(64))
+
+    files = _parquet_files(ckpt)
+    again = run_extraction(spark, transcripts_path, out, ckpt, run_id="e", n_buckets=64)
+    assert again["completed_buckets"] == 0 and again["n_turns"] == 0
+    assert _parquet_files(ckpt) == files
 
 
 def test_second_run_compiles_no_class(spark, transcripts_path, tmp_path):
@@ -106,15 +196,17 @@ def test_run_extraction_keeps_session_overwrite_mode(spark, transcripts_path, tm
     assert [tuple(r) for r in spark.read.parquet(t).collect()] == [("c", 1)]
 
 
-def test_committed_read_isolation(spark, transcripts_path, tmp_path):
-    """Readers using the checkpoint-as-manifest see ONLY completed waves."""
+def test_committed_read_isolation(
+    spark, transcripts_path, tmp_path, clean_run, monkeypatch
+):
+    """Readers using the checkpoint-as-manifest see ONLY completed waves:
+    not a wave that never wrote, nor one whose write committed before its
+    checkpoint append."""
     out = str(tmp_path / "iso")
     ckpt = str(tmp_path / "isock")
-    st = run_extraction(
-        spark, transcripts_path, out, ckpt,
-        run_id="iso", n_buckets=8, n_waves=4, fail_after_waves=2,
-    )
-    assert st["killed"]
+    args = (spark, transcripts_path, out, ckpt)
+    kw = {"run_id": "iso", "n_buckets": 8, "n_waves": 4}
+    _crashed_run(monkeypatch, "write_extracted", 3, *args, **kw)
     raw = catalog.read_extracted(spark, out)
     committed = catalog.read_extracted_committed(spark, out, ckpt, "iso")
     # the manifest view only exposes checkpointed buckets...
@@ -125,38 +217,58 @@ def test_committed_read_isolation(spark, transcripts_path, tmp_path):
              for r in catalog.completed_keys(spark, ckpt, "iso").collect()]
         )
     ).count()
+    # ...also while a resumed wave is written but not yet checkpointed
+    _crashed_run(monkeypatch, "append_checkpoint", 1, *args, **kw)
+    committed_buckets = _buckets(
+        catalog.read_extracted_committed(spark, out, ckpt, "iso"))
+    raw_buckets = _buckets(catalog.read_extracted(spark, out))
+    # the first resumed wave (4 buckets left over 4 waves: one) is on disk
+    assert len(committed_buckets) == 4 and len(raw_buckets) == 5
+    assert committed_buckets < raw_buckets
     # ...and after resume it equals the raw table
-    run_extraction(spark, transcripts_path, out, ckpt, run_id="iso",
-                   n_buckets=8, n_waves=4)
+    run_extraction(*args, **kw)
     assert (
         catalog.read_extracted_committed(spark, out, ckpt, "iso").count()
         == catalog.read_extracted(spark, out).count()
     )
+    assert _digest(
+        catalog.read_extracted_committed(spark, out, ckpt, "iso").select(
+            *catalog.EXTRACTED_TABLE_SCHEMA.names)
+    ) == clean_run["digest"]
 
 
-def test_dedup_stage_kill_resume_and_skip(spark, transcripts_path, tmp_path):
+def test_dedup_stage_kill_resume_and_skip(
+    spark, transcripts_path, tmp_path, clean_run, monkeypatch
+):
     """End-to-end near-dup stage: runs after a killed-then-resumed
     extraction, labels every non-rejected turn with a cluster, marks
     survivors, and is itself resume-skipped on re-run (its own checkpoint
-    key)."""
-    from tika_addons_spark.plans.pipeline import DEDUP_STAGE_KEY, run_dedup_stage
-
+    key). A crash after its table is written and before its checkpoint row
+    reruns the stage."""
     out = str(tmp_path / "ext")
     ckpt = str(tmp_path / "ck")
     dd = str(tmp_path / "dedup")
-    # kill mid-run: extraction incomplete, dedup must NOT have run
-    st = run_extraction(
-        spark, transcripts_path, out, ckpt, run_id="rd", n_buckets=8,
-        n_waves=4, fail_after_waves=2, dedup_target=dd,
-    )
-    assert st["killed"] and "dedup_turns" not in st
+    args = (spark, transcripts_path, out, ckpt)
+    kw = {"run_id": "rd", "n_buckets": 8, "n_waves": 4, "dedup_target": dd}
 
-    # resume: remaining waves + the dedup stage
-    st2 = run_extraction(
-        spark, transcripts_path, out, ckpt, run_id="rd", n_buckets=8,
-        n_waves=4, dedup_target=dd,
-    )
-    assert st2["completed_buckets"] == 4 and st2["dedup_skipped"] is False
+    def dedup_done() -> bool:
+        keys = {r.partition_key for r in catalog.completed_keys(spark, ckpt, "rd").collect()}
+        return DEDUP_STAGE_KEY in keys
+
+    # kill mid-run: extraction incomplete, dedup must NOT have run
+    _crashed_run(monkeypatch, "write_extracted", 3, *args, **kw)
+    assert not dedup_done() and not os.path.exists(dd)
+
+    # resume: the remaining waves commit, then the stage crashes after its
+    # write (append 5 = the stage's, after one append per remaining bucket:
+    # 4 buckets left over 4 waves)
+    _crashed_run(monkeypatch, "append_checkpoint", 5, *args, **kw)
+    assert catalog.completed_keys(spark, ckpt, "rd").count() == 8
+    assert not dedup_done() and os.path.exists(dd)
+
+    # resume again: no bucket left, the stage runs again
+    st2 = run_extraction(*args, **kw)
+    assert st2["completed_buckets"] == 0 and st2["dedup_skipped"] is False
     n_eligible = (
         catalog.read_extracted(spark, out)
         .filter(F.col("parse_status") != "rejected")
@@ -190,11 +302,12 @@ def test_dedup_stage_kill_resume_and_skip(spark, transcripts_path, tmp_path):
     )
     assert jd.count() == 0
 
-    # third run: everything (waves AND dedup) resume-skips
-    st3 = run_extraction(
-        spark, transcripts_path, out, ckpt, run_id="rd", n_buckets=8,
-        n_waves=4, dedup_target=dd,
-    )
+    # both outputs equal the clean run's
+    assert _digest(catalog.read_extracted(spark, out)) == clean_run["digest"]
+    assert _digest(labels) == clean_run["dedup_digest"]
+
+    # next run: everything (waves AND dedup) resume-skips
+    st3 = run_extraction(*args, **kw)
     assert st3["completed_buckets"] == 0 and st3["dedup_skipped"] is True
     assert (
         catalog.read_checkpoint(spark, ckpt)
@@ -226,7 +339,7 @@ def test_dedup_totals_are_one_action(spark, transcripts_path, tmp_path, monkeypa
 
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from tika_addons_spark.plans.pipeline import DEDUP_STAGE_KEY, run_dedup_stage
+    from tika_addons_spark.plans.pipeline import run_dedup_stage
 
     out, ckpt, dd = (str(tmp_path / n) for n in ("ext", "ck", "dedup"))
     run_extraction(spark, transcripts_path, out, ckpt, run_id="r1", n_buckets=4)
@@ -323,6 +436,20 @@ def test_read_transcripts_accepts_uris(spark, tmp_path):
     assert plain
     uri = catalog.read_transcripts(spark, src.as_uri()).collect()
     assert sorted(uri) == sorted(plain)
+
+
+def test_read_transcripts_by_table_name(spark, transcripts_path):
+    """A source that is not a path is a catalog table name; a temp view
+    reads the same rows as the parquet file behind it."""
+    name = "transcripts_by_name"
+    spark.read.parquet(transcripts_path).createOrReplaceTempView(name)
+    try:
+        by_name = catalog.read_transcripts(spark, name)
+        by_path = catalog.read_transcripts(spark, transcripts_path)
+        assert by_name.schema == by_path.schema
+        assert sorted(by_name.collect()) == sorted(by_path.collect())
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def test_checkpoint_frame_matches_python_rows(spark):

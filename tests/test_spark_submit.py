@@ -57,8 +57,10 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
             "--py-files", zip_path,
             str(job),
             "--source", src,
-            "--target", str(tmp_path / "out"),
-            "--checkpoint", str(tmp_path / "ckpt"),
+            # relative to the job's working directory, as an operator
+            # types them: paths, never catalog table names
+            "--target", "out",
+            "--checkpoint", "ckpt",
             "--run-id", "submit-test",
             "--n-buckets", "4",
         ],
@@ -83,3 +85,4 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
             if f.endswith(".parquet"):
                 landed += pq.read_metadata(os.path.join(dirpath, f)).num_rows
     assert landed == stats["n_turns"]
+    assert os.path.isdir(tmp_path / "ckpt")

@@ -9,8 +9,8 @@ A from-scratch reimplementation of the *capabilities* of tballison/tika-addons
   path (HTML boilerplate strip, PDF-ish payload parse, markup normalization)
   — never per-row Python UDFs
 - explicit partitioning / salting for skewed conversations
-- checkpoint-table resumability (Iceberg MERGE when available, parquet
-  anti-join seam in the sandbox)
+- checkpoint-table resumability: a run skips the buckets its checkpoint
+  names (sources/catalog.py)
 
 See SURVEY.md for the operator-by-operator mapping with reference file:line
 citations.

@@ -2,7 +2,7 @@
 
 Spark-first design (SURVEY.md §3.1 trace): the logical plan is
 
-    scan(transcripts)                      -- Iceberg/parquet, pruned columns
+    scan(transcripts)                      -- table or parquet, pruned columns
       → repartition(bucketed conv_id [+salt for whales])
       → sortWithinPartitions(conv_id, turn_idx)   -- deterministic order (W2)
       → mapInArrow(extract_batches_arrow)         -- THIS operator

@@ -16,17 +16,18 @@ tested on local[N]:
   the UDF (W2) — results are order-independent but downstream fixtures and
   windowed consumers get stable order for free.
 - **Waves**: buckets are processed in configurable waves; each wave =
-  dynamic-partition-overwrite of its buckets + a checkpoint append. A killed
-  run resumes by anti-joining buckets against the checkpoint (J2). One wave
-  (default) = one snapshot commit, Iceberg-style; more waves = finer resume
-  granularity (the reference's per-file cache skip taken to table scale).
+  dynamic-partition-overwrite of its buckets + a checkpoint append, one row
+  per bucket. The checkpoint row is the commit: a killed run resumes by
+  skipping the buckets it names (J2), and redoes a bucket that was written
+  but not checkpointed. More waves = finer resume granularity (the
+  reference's per-file cache skip taken to table scale).
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_turns
@@ -183,12 +184,11 @@ def run_extraction(
     n_buckets: int = 32,
     n_waves: int = 1,
     n_partitions: int | None = None,
-    fail_after_waves: int | None = None,
     dedup_target: str | None = None,
 ) -> dict:
-    """Execute the extraction job; returns run stats.
+    """Execute the extraction job; returns run stats. The totals are the
+    sums of the checkpoint rows this call appended.
 
-    ``fail_after_waves`` simulates a mid-run crash (resume test hook).
     ``dedup_target`` (optional) runs the near-dup stage after all waves
     commit, writing the cluster table there (resumable via its own
     checkpoint key)."""
@@ -207,9 +207,7 @@ def run_extraction(
     waves = [w for w in waves if w]
     n_done = 0
     totals = {"n_turns": 0, "chars_in": 0, "chars_out": 0, "n_parse_failures": 0}
-    for wi, wave_buckets in enumerate(waves):
-        if fail_after_waves is not None and wi >= fail_after_waves:
-            return {"completed_buckets": n_done, "killed": True}
+    for wave_buckets in waves:
         started = dt.datetime.now(dt.timezone.utc)
         wave_df = src.filter(F.col("bucket").isin(wave_buckets))
         extracted = extract_turns(
@@ -217,23 +215,7 @@ def run_extraction(
         )
         # bucket is a pure function of conv_id — recompute, don't join (no
         # shuffle; the column is needed only for the partitioned write).
-        out = with_bucket(extracted, n_buckets)
-
-        # A14 — throughput/lineage counters piggyback on the write action
-        # itself (df.observe: zero extra passes; the Spark-native form of
-        # the reference's every-1000-rows progress logs).
-        obs = Observation(f"wave_{wi}")
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum("chars_in").alias("chars_in"),
-            F.sum("chars_out").alias("chars_out"),
-            F.sum((F.col("parse_status") == STATUS_REJECTED).cast("long")).alias(
-                "n_parse_failures"
-            ),
-        )
-        catalog.write_extracted(out, target)
-        wave_totals = obs.get
+        catalog.write_extracted(with_bucket(extracted, n_buckets), target)
 
         # per-bucket lineage from the just-committed wave: ONE columnar
         # re-read (small metric columns only — no second extraction pass),
@@ -241,7 +223,8 @@ def run_extraction(
         # buckets × 12 MIME types rows, so the driver rolls them up per
         # bucket and builds the checkpoint rows itself: the wave's
         # timestamps never reach generated code, which as literals in a
-        # plan made every wave compile a new class.
+        # plan made every wave compile a new class. It counts committed
+        # rows, so the sums stay exact when a task is retried.
         per_type = (
             catalog.read_extracted(spark, target)
             .filter(F.col("bucket").isin(wave_buckets))
@@ -256,9 +239,11 @@ def run_extraction(
             )
             .collect()
         )
-        stats: dict[int, list] = {}
+        # every bucket of the wave gets a row, one with no source rows too:
+        # otherwise each later call of a finished run would redo it
+        stats = {b: [0, 0, 0, 0, {}] for b in wave_buckets}
         for bucket, content_type, *sums in sorted(per_type):
-            acc = stats.setdefault(bucket, [0, 0, 0, 0, {}])
+            acc = stats[bucket]
             for i, n in enumerate(sums):
                 acc[i] += n
             acc[4][content_type] = sums[0]
@@ -272,11 +257,11 @@ def run_extraction(
         )
         catalog.append_checkpoint(ckpt_rows, ckpt)
         n_done += len(wave_buckets)
-        totals["n_turns"] += int(wave_totals.get("n_turns") or 0)
-        totals["chars_in"] += int(wave_totals.get("chars_in") or 0)
-        totals["chars_out"] += int(wave_totals.get("chars_out") or 0)
-        totals["n_parse_failures"] += int(wave_totals.get("n_parse_failures") or 0)
+        for acc in stats.values():
+            for name, n in zip(totals, acc):
+                totals[name] += n
 
+    # "killed" is always False: a crash raises instead; callers read the key
     result = {"completed_buckets": n_done, "killed": False, **totals}
     if dedup_target is not None:
         result.update(

@@ -12,7 +12,7 @@ from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # Input: the transcripts table (BASELINE.json input_hint — authoritative).
-# Production: Iceberg, partitioned bucket(N, conv_id); sandbox: parquet.
+# A catalog table or a parquet path or URI (sources/catalog.py).
 # ---------------------------------------------------------------------------
 TRANSCRIPTS_SCHEMA = T.StructType(
     [
@@ -70,7 +70,7 @@ STATUS_REJECTED = "rejected"
 
 # ---------------------------------------------------------------------------
 # Checkpoint table — resumability (FIXTURES.md §4; pattern:
-# GithubScraper.java:253-263 resume-from-cache → anti-join/MERGE skip).
+# GithubScraper.java:253-263 resume-from-cache → skip completed keys).
 # ---------------------------------------------------------------------------
 CHECKPOINT_SCHEMA = T.StructType(
     [

@@ -117,26 +117,6 @@ def get_spark(
         # many-file cluster-scale tables.
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
     )
-    # Shuffle/spill on RAM-backed storage when available: local-mode shuffle
-    # goes through spark.local.dir, and disk /tmp was measured to both slow
-    # and destabilize the repartition stage (29k→82k turns/s swings; tmpfs
-    # gives a stable ~1.5× on the extraction job at local[32] only; not
-    # re-measured on 4 cores). On a real cluster this is the NVMe/ramdisk
-    # shuffle-dir best practice. Guard:
-    # only when the tmpfs has real headroom — shuffle spill competing with
-    # executor memory in a nearly-full /dev/shm must degrade to disk, not
-    # OOM the host (SPARK_GRAFT_SHM_MIN_FREE_GB overrides, default 8 GiB).
-    if os.path.isdir("/dev/shm"):
-        try:
-            _st = os.statvfs("/dev/shm")
-            _shm_free = _st.f_bavail * _st.f_frsize
-        except OSError:
-            _shm_free = 0
-        _min_free = float(
-            os.environ.get("SPARK_GRAFT_SHM_MIN_FREE_GB", "8")
-        ) * (1024**3)
-        if _shm_free >= _min_free:
-            builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

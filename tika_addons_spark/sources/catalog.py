@@ -1,18 +1,19 @@
-"""Table-format seam: Iceberg in production, parquet in the sandbox.
+"""Table seam: every read and write of the engine's tables goes through here.
 
-The north rule names Iceberg (MERGE-based checkpoint skip, snapshot commits).
-The sandbox has no Iceberg runtime jar, so this module exposes one API with
-two backends chosen at runtime:
+The source is a catalog table name (``cat.db.transcripts``) or a parquet
+path or URI. Every table the job writes (the extraction output, the
+checkpoint, the near-dup labels) is a parquet directory at a Hadoop path
+or URI:
 
-- ``iceberg``: ``spark.read.table`` / ``writeTo(...).append()`` /
-  ``MERGE INTO`` — used when the Iceberg extension is on the classpath.
-- ``parquet`` (sandbox default): identical *semantics* — partition-dynamic
-  overwrite for idempotent bucket re-writes, checkpoint table + broadcast
-  anti-join instead of MERGE (the reference's resume-by-existence:
-  ``bugtracker-crawler/.../GithubScraper.java:253-263``).
+- the output is written with dynamic partition overwrite, so re-running a
+  bucket after a crash replaces it instead of appending to it;
+- the checkpoint is append-only, one row per completed partition key, and
+  is the run's only commit record. Resume skips every unit whose key is
+  in it, the reference's resume-by-existence
+  (``bugtracker-crawler/.../GithubScraper.java:253-263``).
 
-All engine code goes through these functions; pytest runs the parquet
-backend.
+Table-name outputs are out of scope until an Iceberg runtime is in the
+repository.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ EXTRACTED_TABLE_SCHEMA = T.StructType(
 
 
 def read_transcripts(spark: SparkSession, source: str) -> DataFrame:
-    """Read the transcripts table. ``source`` is an Iceberg table name
+    """Read the transcripts table. ``source`` is a catalog table name
     (``cat.db.transcripts``) or a parquet path or URI. Schema is declared,
     never inferred — extra columns are pruned at the scan."""
     if _is_path(source):
@@ -49,35 +50,28 @@ def write_extracted(df: DataFrame, target: str, partition_col: str = "bucket") -
     dynamic partition overwrite replaces exactly the buckets present in
     ``df`` (re-running a wave after a crash cannot double-write). The mode
     is a write option, which outranks the session conf, so the caller's
-    session keeps its own overwrite mode. With Iceberg this is
-    ``writeTo(target).overwritePartitions()``."""
-    if _is_path(target):
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(target)
-        )
-    else:
-        df.writeTo(target).overwritePartitions()
+    session keeps its own overwrite mode."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target)
+    )
 
 
 def read_extracted(spark: SparkSession, target: str) -> DataFrame:
     """Read the extraction output. The schema is declared: inferring it
     from the parquet footers costs one Spark job per read, i.e. per wave."""
-    if _is_path(target):
-        return spark.read.schema(EXTRACTED_TABLE_SCHEMA).parquet(target)
-    return spark.read.table(target)
+    return spark.read.schema(EXTRACTED_TABLE_SCHEMA).parquet(target)
 
 
 def read_extracted_committed(
     spark: SparkSession, target: str, ckpt: str, run_id: str
 ) -> DataFrame:
-    """Snapshot-consistent read: only buckets whose checkpoint row says
-    ``completed`` for this run — the checkpoint table doubles as the commit
-    manifest, so readers never see a wave that is mid-write (with Iceberg
-    this isolation comes from snapshot reads; this is the parquet-backend
-    equivalent, SURVEY.md §8)."""
+    """Committed read: only buckets whose checkpoint row says ``completed``
+    for this run. The checkpoint is the commit manifest, so readers never
+    see a wave that is mid-write, or written but not yet checkpointed
+    (SURVEY.md §8)."""
     committed = (
         completed_keys(spark, ckpt, run_id)
         .select(
@@ -90,28 +84,22 @@ def read_extracted_committed(
 
 
 def append_checkpoint(df: DataFrame, ckpt: str) -> None:
-    """Append checkpoint rows (one per completed partition_key). Parquet
-    append of new files is atomic-enough per wave; Iceberg path is a real
-    snapshot append."""
-    if _is_path(ckpt):
-        df.write.mode("append").parquet(ckpt)
-    else:
-        df.writeTo(ckpt).append()
+    """Append checkpoint rows (one per completed partition_key) as new
+    parquet files; a wave's rows are one append."""
+    df.write.mode("append").parquet(ckpt)
 
 
 def read_checkpoint(spark: SparkSession, ckpt: str) -> DataFrame:
-    if _is_path(ckpt):
-        # A missing checkpoint means a fresh run. Ask the Hadoop FileSystem
-        # of the path's scheme, not os.path: a driver-local exists() is wrong
-        # for s3://, hdfs://... URIs, where an existing remote checkpoint
-        # would read as empty and resume would redo all buckets (and
-        # double-write the output). Nor by letting the read fail: Spark logs
-        # an ERROR and two stack traces for it. Any other failure
-        # (permissions, an unknown scheme) surfaces.
-        if not _path_exists(spark, ckpt):
-            return checkpoint_frame(spark, [])
-        return spark.read.schema(CHECKPOINT_SCHEMA).parquet(ckpt)
-    return spark.read.table(ckpt)
+    # A missing checkpoint means a fresh run. Ask the Hadoop FileSystem of
+    # the path's scheme, not os.path: a driver-local exists() is wrong for
+    # s3://, hdfs://... URIs, where an existing remote checkpoint would read
+    # as empty and resume would redo all buckets (and double-write the
+    # output). Nor by letting the read fail: Spark logs an ERROR and two
+    # stack traces for it. Any other failure (permissions, an unknown
+    # scheme) surfaces.
+    if not _path_exists(spark, ckpt):
+        return checkpoint_frame(spark, [])
+    return spark.read.schema(CHECKPOINT_SCHEMA).parquet(ckpt)
 
 
 def checkpoint_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
@@ -130,8 +118,8 @@ def checkpoint_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
 def completed_keys(spark: SparkSession, ckpt: str, run_id: str) -> DataFrame:
     """Distinct partition_keys already completed for this run_id.
 
-    This is the MERGE-skip predicate: on resume the work table is
-    ``left_anti``-joined against it (J2 — the resume operator)."""
+    This is the resume predicate: a run skips every key in it (J2 — the
+    resume operator)."""
     return (
         read_checkpoint(spark, ckpt)
         .filter((F.col("run_id") == run_id) & (F.col("status") == "completed"))
@@ -146,7 +134,7 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p)
 
 
-def _is_path(target: str) -> bool:
+def _is_path(source: str) -> bool:
     """A path or URI (``/``, ``.parquet``, or an existing local name such as
     a relative directory); anything else is a catalog table name."""
-    return "/" in target or target.endswith(".parquet") or os.path.exists(target)
+    return "/" in source or source.endswith(".parquet") or os.path.exists(source)
